@@ -65,7 +65,7 @@ object PlanStats {
     sb.append("of letting a new barrier read as a plan improvement ")
     sb.append("(ADVICE r14).\n\n")
     sb.append("Barrier-truncated substring rows ")
-    sb.append("(`dedup_exact_substring[,_store,_store_wide,_append]`, ")
+    sb.append("(`dedup_exact_substring[,_store,_append]`, ")
     sb.append("`dedup_substring_decontaminate`): the upstream segments ")
     sb.append("hidden here are plan-asserted in PlanSpec's three ")
     sb.append("substring guards — the gram explode is a pure pruned ")
@@ -73,8 +73,7 @@ object PlanStats {
     sb.append("windows on ONE doc_id exchange (globalRank's ≤width-row ")
     sb.append("ledger is the only unpartitioned window), and the store ")
     sb.append("probe prunes the store scan with the broadcast delta ")
-    sb.append("keys before any aggregation (narrow and wide layouts ")
-    sb.append("both audited).\n\n")
+    sb.append("keys before any aggregation.\n\n")
     sb.append("Harness-barrier rule (r18, from the r17 review's own ")
     sb.append("near-miss): bench/rung HARNESSES must not localCheckpoint ")
     sb.append("upstream of a pushdown or partition-prune they exist to ")

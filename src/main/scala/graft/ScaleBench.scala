@@ -199,7 +199,6 @@ object ScaleBench {
         // r15: suffix-ranking exact-substring dedup (packed doubling)
         // + its gram-count-store ingest path (probe cost ∝ delta)
         "dedup_exact_substring", "dedup_exact_substring_store",
-        "dedup_exact_substring_store_wide",
         // r16: the rerank stage — expected cost = retrieval's slope
         // (shared corpus scan) + a FLAT rerank term (candidate page is
         // query-load-sized, independent of corpus scale)

@@ -3580,27 +3580,22 @@ object Dedup {
   // -------------------------------------------------------------------
 
   /** Eligible window starts with their md5 gram keys — (doc_id, pos,
-    * gh[, gh2]) for every position with >= `minLen` characters
+    * gh, gh2) for every position with >= `minLen` characters
     * remaining. The probe-side front end of the incremental path and
     * the store's content unit.
     *
-    * Key width is the store's scale knob. Narrow (default) is the
-    * 60-bit house convention (hex digits 1-15 of the md5) — one BIGINT
-    * column, fixture-safe, but birthday collisions start merging
-    * distinct grams around 2^30 of them, which only ever INFLATES
-    * counts (extra removal, never missed duplicates). `wide = true`
-    * keys each gram by 120 of the 128 md5 bits as TWO BIGINT columns
-    * (hex 1-15 and 16-30; 16 hex digits would overflow a signed BIGINT
-    * in both engines — the portable-twin house rule), pushing the
-    * any-collision probability at the 100 TB design point
-    * (~2^46.5 distinct grams) below 2^-28. The md5 is computed once
-    * per window either way; the oracle is key-independent (it groups
-    * LITERAL substrings), so both widths are certified against the
-    * same ground truth.
+    * Each gram is keyed by 120 of the 128 md5 bits as TWO BIGINT
+    * columns (hex 1-15 and 16-30; 16 hex digits would overflow a
+    * signed BIGINT in both engines — the portable-twin house rule).
+    * One 60-bit key would start merging distinct grams around 2^30 of
+    * them; two push the any-collision probability at the 100 TB
+    * design point (~2^46.5 distinct grams) below 2^-28. The oracle is
+    * key-independent (it groups LITERAL substrings), so the layout is
+    * certified against ground truth.
     */
-  private[graft] def substringGrams(docs: DataFrame, minLen: Int,
-      wide: Boolean = false): DataFrame = {
-    val starts = docs
+  private[graft] def substringGrams(docs: DataFrame,
+      minLen: Int): DataFrame =
+    docs
       .select(col("doc_id"), col("text"), explode(expr(
         s"""CASE WHEN length(text) < $minLen THEN array()
            |ELSE sequence(1, length(text) - ${minLen - 1}) END"""
@@ -3610,85 +3605,79 @@ object Dedup {
       // conv chain) — this is the hottest md5 site in the repo (one
       // hash per character position of every document)
       .withColumn("h", expr(s"md5_prefix120(substring(text, pos, $minLen))"))
-    val keyed = starts.select(col("doc_id") +: col("pos") +:
-      (expr("h[0]").as("gh") +:
-        (if (wide) Seq(expr("h[1]").as("gh2")) else Seq.empty)): _*)
-    keyed
-  }
+      .select(col("doc_id"), col("pos"), expr("h[0]").as("gh"),
+        expr("h[1]").as("gh2"))
 
-  /** The store's key columns at a given width — every store consumer
-    * joins/aggregates on exactly this set.
+  /** The store's key columns — every store consumer joins/aggregates
+    * on exactly this set.
     */
-  private def substringKeyCols(wide: Boolean): Seq[String] =
-    if (wide) Seq("gh", "gh2") else Seq("gh")
+  private val substringKeyCols = Seq("gh", "gh2")
 
-  private def substringMetaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_meta_minlen")
-
-  /** Key-width layout discriminator (the LM store's `iln` lesson: a
-    * change in a STORED value's derivation must be visible in the
-    * store layout). Absent on pre-r16 stores → narrow (60-bit).
+  /** Every store consumer's precondition: the store at `path` is
+    * complete AND carries the 120-bit key layout (`_meta_keywidth` =
+    * 120, the LM store's `iln` lesson: a stored value's derivation is
+    * visible in the layout). A legacy 60-bit store holds (gh, cnt)
+    * rows with no `_meta_keywidth`; probing it would mis-join and an
+    * append would land a (gh, gh2, cnt) overlay beside a (gh, cnt)
+    * base, so it is refused before anything is read or written.
+    * Returns the store's `minLen`.
     */
-  private def substringWidePath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_meta_keywidth")
-
-  private def readSubstringMeta(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Int = {
-    val in = fs.open(substringMetaPath(path))
-    try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-    finally in.close()
-  }
-
-  private def readSubstringWide(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Boolean =
-    fs.exists(substringWidePath(path)) && {
-      val in = fs.open(substringWidePath(path))
-      try scala.io.Source.fromInputStream(in).mkString.trim == "120"
-      finally in.close()
+  private def requireSubstringStore(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, op: String): Int = {
+    def meta(name: String): Option[String] = {
+      val p = new org.apache.hadoop.fs.Path(path, name)
+      if (fs.exists(p)) Some(new String(readSmallFile(fs, p), "UTF-8").trim)
+      else None
     }
+    require(isCompleteSignatureStore(fs, path),
+      s"$op: $path is not a complete substring store; " +
+        "build it with writeSubstringStore")
+    require(meta("_meta_keywidth").contains("120"),
+      s"$op: $path is a legacy 60-bit-key substring store " +
+        "(no `_meta_keywidth` = 120); rebuild it with writeSubstringStore")
+    meta("_meta_minlen").get.toInt
+  }
 
-  /** Persist the base corpus's substring gram-count store: one
-    * (gh, cnt) row per distinct length-`minLen` window — the durable
-    * artifact that lets every later ingest batch run exact-substring
-    * dedup WITHOUT re-touching (or re-ranking) the base corpus.
-    * Layout: `base/` parquet + overlay `batch=` dirs (appends) + the
-    * `_applied/<tag>` replay ledger + a `_meta_minlen` discriminator
-    * (a store is only valid for the threshold it was built at — the
-    * LM store's `iln` path-discriminator lesson, r14). Atomic
-    * temp+rename publish; counts are ADDITIVE, so append ≡ fresh
-    * EXACTLY and compaction is a pure re-layout.
-    *
-    * `wideKeys` defaults to TRUE (r17 flip): the narrow 60-bit layout
-    * starts merge-colliding around 2^30 distinct grams — comfortably
-    * reachable at the 100 TB design point — and a NEW production
-    * store should not need its caller to know that; the wide 120-bit
-    * layout keeps any-collision probability below 2^-28 there
-    * (docs/SCALE.md). Narrow (`wideKeys = false`) stays available —
-    * half the key bytes, spec-lawed ≡ wide, never MISSES a duplicate
-    * (collisions only inflate counts) — for corpora provably under
-    * ~10^8 distinct grams. Width is a STORE property: consumers
-    * derive it from `_meta_keywidth`, so existing narrow stores are
-    * untouched by the flip and rebuilt stores migrate silently.
+  /** Layout meta + `_SUCCESS` into the staged `tmp` root, then the
+    * atomic swap — the publish tail shared by build and compaction.
     */
-  def writeSubstringStore(docs: DataFrame, path: String,
-      minLen: Int = 40, wideKeys: Boolean = true): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".inprogress")
-    fs.delete(tmp, true)
-    substringGrams(docs, minLen, wideKeys)
-      .groupBy(substringKeyCols(wideKeys).map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .write.parquet(new org.apache.hadoop.fs.Path(tmp, "base").toString)
+  private def publishSubstringStore(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
+      minLen: Int): Unit = {
     writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, "_meta_minlen"),
       minLen.toString.getBytes("UTF-8"))
-    if (wideKeys)
-      writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp,
-        "_meta_keywidth"), "120".getBytes("UTF-8"))
+    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, "_meta_keywidth"),
+      "120".getBytes("UTF-8"))
     writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"),
       Array.emptyByteArray)
     StoreSwap.swapIn(fs, tmp, dst)
+  }
+
+  /** Persist the base corpus's substring gram-count store: one
+    * (gh, gh2, cnt) row per distinct length-`minLen` window (the
+    * 120-bit keys of [[substringGrams]]) — the durable
+    * artifact that lets every later ingest batch run exact-substring
+    * dedup WITHOUT re-touching (or re-ranking) the base corpus.
+    * Layout: `base/` parquet + overlay `batch=` dirs (appends) + the
+    * `_applied/<tag>` replay ledger + `_meta_minlen` / `_meta_keywidth`
+    * discriminators (a store is only valid for the threshold and key
+    * layout it was built at — the LM store's `iln` path-discriminator
+    * lesson, r14; checked by [[requireSubstringStore]]). Atomic
+    * temp+rename publish; counts are ADDITIVE, so append ≡ fresh
+    * EXACTLY and compaction is a pure re-layout.
+    */
+  def writeSubstringStore(docs: DataFrame, path: String,
+      minLen: Int = 40): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      docs.sparkSession.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(path + ".inprogress")
+    fs.delete(tmp, true)
+    substringGrams(docs, minLen)
+      .groupBy(substringKeyCols.map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+      .write.parquet(new org.apache.hadoop.fs.Path(tmp, "base").toString)
+    publishSubstringStore(fs, tmp, new org.apache.hadoop.fs.Path(path),
+      minLen)
   }
 
   /** Base ∪ overlay gram-count rows, UN-aggregated (a gram present in
@@ -3702,7 +3691,7 @@ object Dedup {
       spark.sparkContext.hadoopConfiguration)
     StoreSwap.recover(fs, new org.apache.hadoop.fs.Path(path),
       p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-    val cols = substringKeyCols(readSubstringWide(fs, path)) :+ "cnt"
+    val cols = substringKeyCols :+ "cnt"
     val base = spark.read.parquet(s"$path/base").select(cols.map(col): _*)
     clusterMapBatches(fs, path).map { case (_, p) =>
       spark.read.parquet(p.toString).select(cols.map(col): _*)
@@ -3729,16 +3718,13 @@ object Dedup {
     * base rewrite), published temp+rename with the `_applied/<tag>`
     * marker written LAST. A replayed batch (marker present) is a
     * no-op; a crashed append re-runs cleanly (same-tag dir replaced).
-    * Key width (and `minLen`) come from the STORE's meta, so appends
-    * to a wide store stay wide with no caller coordination.
+    * `minLen` comes from the STORE's meta, so appends need no caller
+    * coordination.
     */
   def appendToSubstringStore(delta: DataFrame, path: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       delta.sparkSession.sparkContext.hadoopConfiguration)
-    require(isCompleteSignatureStore(fs, path),
-      s"appendToSubstringStore: $path is not a complete store")
-    val minLen = readSubstringMeta(fs, path)
-    val wide = readSubstringWide(fs, path)
+    val minLen = requireSubstringStore(fs, path, "appendToSubstringStore")
     val tagOpt = substringBatchTag(delta)
     if (tagOpt.isEmpty) return // empty delta
     val tag = tagOpt.get
@@ -3752,8 +3738,8 @@ object Dedup {
         if p.getName.endsWith(s"_$tag")) fs.delete(p, true)
     val tmp = new org.apache.hadoop.fs.Path(path, s".appendtmp_$tag")
     fs.delete(tmp, true)
-    substringGrams(delta, minLen, wide)
-      .groupBy(substringKeyCols(wide).map(col): _*)
+    substringGrams(delta, minLen)
+      .groupBy(substringKeyCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"))
       .write.parquet(tmp.toString)
     require(fs.rename(tmp, dstDir), s"substring batch move failed: $tmp")
@@ -3783,17 +3769,15 @@ object Dedup {
       path: String): Int = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
+    val minLen = requireSubstringStore(fs, path, "compactSubstringStore")
     val nBatches = clusterMapBatches(fs, path).size
     if (nBatches == 0) return 0
-    val minLen = readSubstringMeta(fs, path)
-    val wide = readSubstringWide(fs, path)
     // read-before-replace: eager checkpoint before the swap deletes
     // the inputs (the r9 store-append convention)
     val merged = readSubstringRaw(spark, path)
-      .groupBy(substringKeyCols(wide).map(col): _*)
+      .groupBy(substringKeyCols.map(col): _*)
       .agg(sum("cnt").as("cnt"))
       .localCheckpoint()
-    val dst = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + ".inprogress")
     fs.delete(tmp, true)
     merged.write.parquet(new org.apache.hadoop.fs.Path(tmp, "base").toString)
@@ -3802,14 +3786,8 @@ object Dedup {
       for (m <- fs.listStatus(ledger))
         writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp,
           s"_applied/${m.getPath.getName}"), Array.emptyByteArray)
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, "_meta_minlen"),
-      minLen.toString.getBytes("UTF-8"))
-    if (wide)
-      writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp,
-        "_meta_keywidth"), "120".getBytes("UTF-8"))
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"),
-      Array.emptyByteArray)
-    StoreSwap.swapIn(fs, tmp, dst)
+    publishSubstringStore(fs, tmp, new org.apache.hadoop.fs.Path(path),
+      minLen)
     nBatches
   }
 
@@ -3827,13 +3805,14 @@ object Dedup {
     * callers' scaladoc).
     */
   private def prunedSubstringScan(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, probeKeys: DataFrame, keys: Seq[String],
+      storePath: String, probeKeys: DataFrame,
       maxBroadcastKeys: Long): DataFrame =
     if (probeKeys.count() <= maxBroadcastKeys)
-      readSubstringRaw(spark, storePath).join(broadcast(probeKeys), keys)
+      readSubstringRaw(spark, storePath)
+        .join(broadcast(probeKeys), substringKeyCols)
     else
       readSubstringRaw(spark, storePath)
-        .join(probeKeys.hint("shuffle_hash"), keys, "left_semi")
+        .join(probeKeys.hint("shuffle_hash"), substringKeyCols, "left_semi")
 
   /** Exact-substring dedup of an ingest BATCH against the persisted
     * gram-count store — per-batch cost proportional to the delta, the
@@ -3843,9 +3822,9 @@ object Dedup {
     * [[exactSubstringDedup]] over base ∪ delta restricted to the delta
     * docs (spec law), so the batch path's oracle doubles for this one.
     *
-    * Scale shape: the delta explodes once into (doc_id, pos, gh); the
-    * store side is pruned BEFORE any aggregation by broadcasting the
-    * delta's distinct gram keys into the store scan (the store NEVER
+    * Scale shape: the delta explodes once into (doc_id, pos, gh, gh2);
+    * the store side is pruned BEFORE any aggregation by broadcasting
+    * the delta's distinct gram keys into the store scan (the store NEVER
     * shuffles — the [[incrementalLshStore]] property), so the exact
     * total per probed gram is a delta-sized aggregate even when
     * overlay batches overlap. No windows anywhere; reassembly is the
@@ -3870,23 +3849,21 @@ object Dedup {
     val spark = delta.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    require(isCompleteSignatureStore(fs, storePath),
-      s"exactSubstringDedupIncremental: $storePath is not a complete store")
-    val minLen = readSubstringMeta(fs, storePath)
-    val wide = readSubstringWide(fs, storePath)
-    val keys = substringKeyCols(wide)
-    val grams = substringGrams(delta, minLen, wide).localCheckpoint(false)
-    val deltaCnt = grams.groupBy(keys.map(col): _*)
+    val minLen = requireSubstringStore(fs, storePath,
+      "exactSubstringDedupIncremental")
+    val grams = substringGrams(delta, minLen).localCheckpoint(false)
+    val deltaCnt = grams.groupBy(substringKeyCols.map(col): _*)
       .agg(count(lit(1)).as("dcnt"))
       .localCheckpoint(false)
     val pruned = prunedSubstringScan(spark, storePath,
-      deltaCnt.select(keys.map(col): _*), keys, maxBroadcastKeys)
-    val baseCnt = pruned.groupBy(keys.map(col): _*)
+      deltaCnt.select(substringKeyCols.map(col): _*), maxBroadcastKeys)
+    val baseCnt = pruned.groupBy(substringKeyCols.map(col): _*)
       .agg(sum("cnt").as("bcnt"))
-    val dupGh = deltaCnt.join(baseCnt.hint("shuffle_hash"), keys, "left")
+    val dupGh = deltaCnt
+      .join(baseCnt.hint("shuffle_hash"), substringKeyCols, "left")
       .filter(col("dcnt") + coalesce(col("bcnt"), lit(0L)) >= 2)
-      .select(keys.map(col): _*)
-    val dupStarts = grams.join(dupGh.hint("shuffle_hash"), keys)
+      .select(substringKeyCols.map(col): _*)
+    val dupStarts = grams.join(dupGh.hint("shuffle_hash"), substringKeyCols)
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("pos"))).as("ss"))
     assembleSubstringReport(delta, dupStarts, minLen)
@@ -3894,7 +3871,7 @@ object Dedup {
 
   /** Oracle-checkable CENSUS of a substring store's content: exact
     * gram totals bucketed by `gh % 16`, with a portable 60-bit-md5
-    * xor content hash over the (gh, cnt) pairs (the export-manifest
+    * xor content hash over the (gh, gh2, cnt) rows (the export-manifest
     * convention). Both sides are recomputable by DuckDB from the raw
     * `documents` table ([[ingestSubstringSql]]), so bit-equality
     * proves a store grown through any sequence of appends (e.g. the
@@ -3905,55 +3882,44 @@ object Dedup {
       path: String): DataFrame = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    require(isCompleteSignatureStore(fs, path),
-      s"substringStoreReport: $path is not a complete store")
-    val wide = readSubstringWide(fs, path)
-    val keys = substringKeyCols(wide)
+    requireSubstringStore(fs, path, "substringStoreReport")
     val counts = readSubstringRaw(spark, path)
-      .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt"))
-    // content hash folds EVERY key column (wide stores fold gh2 too)
-    val hashed = keys.map(k => s"cast($k as string)").mkString(", ':', ")
+      .groupBy(substringKeyCols.map(col): _*).agg(sum("cnt").as("cnt"))
+    // content hash folds EVERY key column
     counts
       .groupBy(pmod(col("gh"), lit(16L)).as("bucket"))
       .agg(count(lit(1)).as("n_grams"),
         sum(col("cnt")).as("n_windows"),
-        expr(s"""bit_xor(md5_prefix60(concat(
-          $hashed, ':', cast(cnt as string))))""").as("xor_hash"))
+        expr("""bit_xor(md5_prefix60(concat(cast(gh as string), ':',
+          cast(gh2 as string), ':', cast(cnt as string))))""")
+          .as("xor_hash"))
       .orderBy("bucket")
   }
 
   /** DuckDB oracle for [[substringStoreReport]] over a store holding
     * the WHOLE `documents` table (base build + loop-appended batches):
-    * recompute every length-`minLen` window's md5 key (60-bit, or the
-    * two 120-bit halves under `wide`) and its exact multiplicity from
-    * the raw table, then the same census with the same key-folding
-    * content hash.
+    * recompute every length-`minLen` window's two 60-bit md5 key
+    * halves and its exact multiplicity from the raw table, then the
+    * same census with the same key-folding content hash.
     */
-  def ingestSubstringSql(minLen: Int = 40, wide: Boolean = false): String = {
+  def ingestSubstringSql(minLen: Int = 40): String = {
     val L = minLen
-    val keyDefs =
-      if (wide)
-        """CAST('0x' || substring(h, 1, 15) AS BIGINT) AS gh,
-          |    CAST('0x' || substring(h, 16, 15) AS BIGINT) AS gh2""".stripMargin
-      else "CAST('0x' || substring(h, 1, 15) AS BIGINT) AS gh"
-    val groupKeys = if (wide) "1, 2" else "1"
-    val hashKeys =
-      if (wide) "CAST(gh AS VARCHAR) || ':' || CAST(gh2 AS VARCHAR)"
-      else "CAST(gh AS VARCHAR)"
     s"""WITH d AS (
        |  SELECT doc_id, text, length(text) AS n FROM documents),
        |g AS (
-       |  SELECT $keyDefs
+       |  SELECT CAST('0x' || substring(h, 1, 15) AS BIGINT) AS gh,
+       |    CAST('0x' || substring(h, 16, 15) AS BIGINT) AS gh2
        |  FROM (
        |    SELECT md5(substring(text, CAST(i AS INT), $L)) AS h
        |    FROM d, UNNEST(range(1, greatest(n - $L + 1, 0) + 1)) AS u(i)
        |  ) hh),
-       |c AS (SELECT ${if (wide) "gh, gh2" else "gh"}, count(*) AS cnt
-       |      FROM g GROUP BY $groupKeys)
+       |c AS (SELECT gh, gh2, count(*) AS cnt
+       |      FROM g GROUP BY 1, 2)
        |SELECT gh % 16 AS bucket,
        |  count(*) AS n_grams,
        |  CAST(SUM(cnt) AS BIGINT) AS n_windows,
-       |  bit_xor(CAST('0x' || substring(md5($hashKeys || ':'
+       |  bit_xor(CAST('0x' || substring(md5(CAST(gh AS VARCHAR) || ':'
+       |    || CAST(gh2 AS VARCHAR) || ':'
        |    || CAST(cnt AS VARCHAR)), 1, 15) AS BIGINT)) AS xor_hash
        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin
   }
@@ -3984,18 +3950,15 @@ object Dedup {
     val spark = probe.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    require(isCompleteSignatureStore(fs, storePath),
-      s"substringDecontaminate: $storePath is not a complete store")
-    val minLen = readSubstringMeta(fs, storePath)
-    val wide = readSubstringWide(fs, storePath)
-    val keys = substringKeyCols(wide)
-    val grams = substringGrams(probe, minLen, wide).localCheckpoint(false)
-    val probeKeys = grams.select(keys.map(col): _*).distinct()
+    val minLen = requireSubstringStore(fs, storePath,
+      "substringDecontaminate")
+    val grams = substringGrams(probe, minLen).localCheckpoint(false)
+    val probeKeys = grams.select(substringKeyCols.map(col): _*).distinct()
       .localCheckpoint(false)
     val pruned = prunedSubstringScan(spark, storePath, probeKeys,
-      keys, maxBroadcastKeys)
-    val hit = pruned.select(keys.map(col): _*).distinct()
-    val dupStarts = grams.join(hit.hint("shuffle_hash"), keys)
+      maxBroadcastKeys)
+    val hit = pruned.select(substringKeyCols.map(col): _*).distinct()
+    val dupStarts = grams.join(hit.hint("shuffle_hash"), substringKeyCols)
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("pos"))).as("ss"))
     assembleSubstringReport(probe, dupStarts, minLen)
@@ -4062,19 +4025,19 @@ object Dedup {
   /** Build-once helper for the driver entries ([[ensureSignatureStore]]
     * pattern): content fingerprint folds every column the store
     * derives from — (count, max doc_id, xxhash64(doc_id, text)) — plus
-    * `minLen` and the key width, so a regenerated fixture, a different
-    * threshold, or a different key layout rebuilds rather than serving
-    * stale counts.
+    * `minLen`, so a regenerated fixture or a different threshold
+    * rebuilds rather than serving stale counts. The fixed `_w120`
+    * suffix names the 120-bit key layout: a legacy 60-bit cache at
+    * the suffix-less path (the r13 rule) is never served.
     */
   def ensureSubstringStore(baseDocs: DataFrame, tag: String,
-      minLen: Int = 40, wideKeys: Boolean = true): String = {
+      minLen: Int = 40): String = {
     val path = s"/tmp/graft_substrstore_${tag}_" +
-      s"${substringEnsureFp(baseDocs)}_L$minLen" +
-      (if (wideKeys) "_w120" else "")
+      s"${substringEnsureFp(baseDocs)}_L${minLen}_w120"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       baseDocs.sparkSession.sparkContext.hadoopConfiguration)
     if (!isCompleteSignatureStore(fs, path))
-      writeSubstringStore(baseDocs, path, minLen, wideKeys)
+      writeSubstringStore(baseDocs, path, minLen)
     path
   }
 
@@ -4088,14 +4051,13 @@ object Dedup {
     * is path-cached and the append replays as a marker no-op.
     */
   def ensureAppendedSubstringStore(base: DataFrame, batch: DataFrame,
-      tag: String, minLen: Int = 40, wideKeys: Boolean = true): String = {
+      tag: String, minLen: Int = 40): String = {
     val path = s"/tmp/graft_substrstore_${tag}_${substringEnsureFp(base)}" +
-      s"__${substringEnsureFp(batch)}_L$minLen" +
-      (if (wideKeys) "_w120" else "")
+      s"__${substringEnsureFp(batch)}_L${minLen}_w120"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       base.sparkSession.sparkContext.hadoopConfiguration)
     if (!isCompleteSignatureStore(fs, path))
-      writeSubstringStore(base, path, minLen, wideKeys)
+      writeSubstringStore(base, path, minLen)
     appendToSubstringStore(batch, path)
     path
   }

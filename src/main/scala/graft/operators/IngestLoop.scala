@@ -51,10 +51,6 @@ object IngestLoop {
     *    ([[Dedup.appendToSubstringStore]] — content-tagged overlay +
     *    `_applied` ledger), so the NEXT batch's
     *    [[Dedup.exactSubstringDedupIncremental]] gate sees it as base.
-    *    Width-agnostic: the append derives the gram-key layout from
-    *    the store's `_meta_keywidth`, so a loop over a store created
-    *    with `wideKeys = true` (the r16 100 TB knob) stays wide with
-    *    no loop-side coordination.
     */
   def runBatch(mapPath: String, sigStorePath: String, exportPath: String,
       delta: DataFrame, batchId: Long, sampleMod: Int = 2,

@@ -100,7 +100,8 @@ object SearchIndex {
 
   /** The root-level layout discriminator for the positional option —
     * a STORE property, not a caller choice (the substring store's
-    * `_meta_keywidth` lesson): appends and reads derive it from here.
+    * layout-discriminator lesson): appends and reads derive it from
+    * here.
     * Root-level (not under `meta/`) so the per-append meta republish
     * never has to carry it; only the fresh-build root swap writes it.
     */

@@ -588,27 +588,14 @@ object Extensions {
       (c => Dedup.exactSubstringDedup(c.documents)),
     // ingest-batch path vs the PERSISTED gram-count store (base 4/5 of
     // doc_ids computed once, ever; delta 1/5 probed against it) — the
-    // fresh-restricted oracle proves the store round trip is invisible
+    // fresh-restricted oracle proves the store round trip is invisible;
+    // the literal-gram oracle never sees gram hashes, so a green hash
+    // certifies the 120-bit key layout against ground truth
     "dedup_exact_substring_store" -> (c => {
       val base = c.documents.filter(expr("pmod(doc_id, 5) != 0"))
       val delta = c.documents.filter(expr("pmod(doc_id, 5) = 0"))
-      // narrow EXPLICIT since the r17 default flip to wide: this
-      // entry (and the decontaminate probe sharing its store) is what
-      // keeps the 60-bit layout driver-certified
       val store = Dedup.ensureSubstringStore(base,
-        new java.io.File(c.dir).getName + "_substr", wideKeys = false)
-      Dedup.exactSubstringDedupIncremental(delta, store)
-    }),
-    // the SAME incremental probe over a WIDE-KEY store (120 md5 bits
-    // as two BIGINT halves — the 100 TB key-width knob; 60-bit keys
-    // merge distinct grams past ~2^30 of them): the unchanged
-    // literal-gram oracle never sees gram hashes, so a green hash
-    // certifies the wide layout against ground truth
-    "dedup_exact_substring_store_wide" -> (c => {
-      val base = c.documents.filter(expr("pmod(doc_id, 5) != 0"))
-      val delta = c.documents.filter(expr("pmod(doc_id, 5) = 0"))
-      val store = Dedup.ensureSubstringStore(base,
-        new java.io.File(c.dir).getName + "_substrw", wideKeys = true)
+        new java.io.File(c.dir).getName + "_substr")
       Dedup.exactSubstringDedupIncremental(delta, store)
     }),
     // substring-level decontamination: eval/test windows stripped iff
@@ -619,14 +606,12 @@ object Extensions {
       val base = c.documents.filter(expr("pmod(doc_id, 5) != 0"))
       val probe = c.documents.filter(expr("pmod(doc_id, 5) = 0"))
       val store = Dedup.ensureSubstringStore(base,
-        new java.io.File(c.dir).getName + "_substr", wideKeys = false)
+        new java.io.File(c.dir).getName + "_substr")
       Dedup.substringDecontaminate(probe, store)
     }),
     // grow-by-append store (base 3/5, one appended 1/5 batch) probed
     // by the same delta — additive counts make append ≡ fresh exactly,
-    // so the SAME oracle covers it end-to-end (replay guard included);
-    // rides the r17 WIDE default, so the append path is
-    // driver-certified on the production key layout too
+    // so the SAME oracle covers it end-to-end (replay guard included)
     "dedup_exact_substring_append" -> (c => {
       val b1 = c.documents.filter(expr("pmod(doc_id, 5) IN (1, 2, 3)"))
       val b2 = c.documents.filter(expr("pmod(doc_id, 5) = 4"))
@@ -700,14 +685,14 @@ object Extensions {
         new java.io.File(c.dir).getName + "_iloop")
       Dedup.substringStoreReport(c.spark, s"$root/substr")
     }),
-    // the WIDE-key store censused directly: exact bucketed totals +
-    // the two-key-folding xor content hash vs a from-scratch DuckDB
+    // the gram store censused directly: exact bucketed totals + the
+    // two-key-folding xor content hash vs a from-scratch DuckDB
     // recomputation of both 60-bit md5 halves — the 120-bit layout's
     // own content certification (the probe entries certify its
     // VERDICTS; this certifies the stored counts themselves)
     "dedup_substring_census_wide" -> (c => {
       val store = Dedup.ensureSubstringStore(c.documents,
-        new java.io.File(c.dir).getName + "_substrcw", wideKeys = true)
+        new java.io.File(c.dir).getName + "_substrcw")
       Dedup.substringStoreReport(c.spark, store)
     }),
     "dedup_within_doc" -> (c => Dedup.withinDocDedup(c.documents)),
@@ -965,10 +950,8 @@ object Extensions {
     "pipeline_ingest_search" -> Search.bm25QueriesSql(),
     "pipeline_ingest_profile" ->
       Profiling.driftSqlOver("1 = 1", "doc_id % 2 = 0"),
-    // the loop's gram store rides the r17 wide default → wide census
-    "pipeline_ingest_substring" -> Dedup.ingestSubstringSql(wide = true),
-    "dedup_substring_census_wide" ->
-      Dedup.ingestSubstringSql(wide = true),
+    "pipeline_ingest_substring" -> Dedup.ingestSubstringSql(),
+    "dedup_substring_census_wide" -> Dedup.ingestSubstringSql(),
     "dedup_source_overlap" -> Dedup.sourceOverlapSql,
     "dedup_split_leakage" -> Dedup.splitLeakageSql(),
     // store round-trip must be invisible — same oracle as the one-shot
@@ -995,11 +978,6 @@ object Extensions {
     // fresh full-corpus computation restricted to the delta docs —
     // what both store paths (one-shot and grow-by-append) must equal
     "dedup_exact_substring_store" ->
-      Dedup.exactSubstringDedupIncrementalSql(),
-    // the wide-key (120-bit) store probed by the SAME key-independent
-    // literal-gram oracle — a green hash certifies the wide layout
-    // against ground truth, not against the narrow implementation
-    "dedup_exact_substring_store_wide" ->
       Dedup.exactSubstringDedupIncrementalSql(),
     "dedup_exact_substring_append" ->
       Dedup.exactSubstringDedupIncrementalSql(),

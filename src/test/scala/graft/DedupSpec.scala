@@ -1356,6 +1356,15 @@ class DedupSpec extends AnyFunSuite {
     // of the folded batch must still be a no-op
     Dedup.appendToSubstringStore(b2, grown)
     assert(batchDirs(grown) == 0)
+    // after append + compaction the folded base still carries both key
+    // columns and the layout discriminator (a dropped `_meta_keywidth`
+    // would make every later consumer refuse the store)
+    assert(spark.read.parquet(s"$grown/base").columns.toSet ==
+      Set("gh", "gh2", "cnt"))
+    val kw = new org.apache.hadoop.fs.Path(grown, "_meta_keywidth")
+    val in = fs.open(kw)
+    try assert(scala.io.Source.fromInputStream(in).mkString.trim == "120")
+    finally in.close()
   }
 
   test("substring decontamination: train-overlap strips, " +
@@ -1401,42 +1410,33 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("substring store: wide keys ≡ narrow keys; appends and " +
-    "compaction preserve the width") {
-    import org.apache.spark.sql.functions.expr
-    val all = substringCorpus
-    val b1 = all.filter(expr("doc_id IN (1, 3)"))
-    val b2 = all.filter(expr("doc_id IN (4, 5)"))
-    val delta = all.filter(expr("doc_id IN (0, 2)"))
-    val tmp = java.nio.file.Files.createTempDirectory("substr_wide")
-    val narrow = tmp.resolve("narrow").toString
-    val wide = tmp.resolve("wide").toString
-    Dedup.writeSubstringStore(b1.union(b2), narrow, minLen = 40,
-      wideKeys = false)
-    Dedup.writeSubstringStore(b1, wide, minLen = 40, wideKeys = true)
-    // the store meta, not the caller, decides the key layout: this
-    // append must produce a (gh, gh2, cnt) overlay
-    Dedup.appendToSubstringStore(b2, wide)
-    val viaNarrow = Dedup.exactSubstringDedupIncremental(delta, narrow)
-      .collect().map(_.toString)
-    val viaWide = Dedup.exactSubstringDedupIncremental(delta, wide)
-      .collect().map(_.toString)
-    assert(viaWide.sameElements(viaNarrow))
-    // decontamination over the same two stores agrees too
-    val dNarrow = Dedup.substringDecontaminate(delta, narrow)
-      .collect().map(_.toString)
-    val dWide = Dedup.substringDecontaminate(delta, wide)
-      .collect().map(_.toString)
-    assert(dWide.sameElements(dNarrow))
-    // compaction keeps the _meta_keywidth discriminator: the folded
-    // store still answers identically (a dropped discriminator would
-    // read base as (gh, cnt) and fail or mis-join)
-    assert(Dedup.compactSubstringStore(spark, wide) == 1)
-    assert(Dedup.exactSubstringDedupIncremental(delta, wide)
-      .collect().map(_.toString).sameElements(viaNarrow))
-    // and the wide store's base really carries two key columns
-    assert(spark.read.parquet(s"$wide/base").columns.toSet ==
-      Set("gh", "gh2", "cnt"))
+  test("substring store: a legacy 60-bit-key store is refused by every " +
+    "consumer, before anything is written") {
+    val tmp = java.nio.file.Files.createTempDirectory("substr_legacy")
+    val path = tmp.resolve("store").toString
+    // the pre-r16 narrow layout by hand: (gh, cnt) base, `_meta_minlen`
+    // and `_SUCCESS`, no `_meta_keywidth`
+    Seq((1L, 2L), (7L, 1L)).toDF("gh", "cnt").write.parquet(s"$path/base")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    def touch(name: String, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(path, name), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    touch("_meta_minlen", "40")
+    touch("_SUCCESS", "")
+    def refused(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(path) &&
+        e.getMessage.contains("writeSubstringStore"), e.getMessage)
+    }
+    refused(Dedup.appendToSubstringStore(substringCorpus, path))
+    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(path))
+      .exists(_.getPath.getName.startsWith("batch=")))
+    refused(Dedup.compactSubstringStore(spark, path))
+    refused(Dedup.exactSubstringDedupIncremental(substringCorpus, path))
+    refused(Dedup.substringStoreReport(spark, path))
+    refused(Dedup.substringDecontaminate(substringCorpus, path))
   }
 
   test("substring store: over-cap probes fall back to the shuffle-side " +

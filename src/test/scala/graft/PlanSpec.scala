@@ -421,15 +421,12 @@ class PlanSpec extends AnyFunSuite {
     // the store's content unit and the probe front end: must stay a
     // pure map-side explode — any exchange here multiplies by the
     // n·minLen gram fan-out before the aggregate can reduce it
-    for (wide <- Seq(false, true)) {
-      val p = planOf(graft.operators.Dedup
-        .substringGrams(ctx.documents, 40, wide))
-      assert(!p.contains("Exchange"), p)
-      assert(!p.contains("Join"), p)
-      assert(p.contains("Generate"), p)
-      // column pruning: only (doc_id, text) leave the parquet scan
-      assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
-    }
+    val p = planOf(graft.operators.Dedup.substringGrams(ctx.documents, 40))
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("Join"), p)
+    assert(p.contains("Generate"), p)
+    // column pruning: only (doc_id, text) leave the parquet scan
+    assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
   }
 
   test("substring rank frame: every window hash-partitions on doc_id " +
@@ -461,20 +458,18 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.expr
     val base = ctx.documents.filter(expr("pmod(doc_id, 3) != 0"))
     val delta = ctx.documents.filter(expr("pmod(doc_id, 3) = 0"))
-    for (wide <- Seq(false, true)) {
-      val store = graft.operators.Dedup.ensureSubstringStore(base,
-        s"plan_spec_substr_$wide", wideKeys = wide)
-      val p = planOf(graft.operators.Dedup
-        .exactSubstringDedupIncremental(delta, store))
-      // the store side is the parquet scan joined against the
-      // broadcast probe keys BEFORE any aggregation — the store never
-      // shuffles; suffix windows don't exist on this path at all
-      assert(p.contains("Scan parquet"), p)
-      assert(p.contains("BroadcastHashJoin"), p)
-      assert(!p.contains("Window"), p)
-      assert(!p.contains("SortMergeJoin"), p)
-      assert(!p.contains("CartesianProduct"), p)
-    }
+    val store = graft.operators.Dedup.ensureSubstringStore(base,
+      "plan_spec_substr")
+    val p = planOf(graft.operators.Dedup
+      .exactSubstringDedupIncremental(delta, store))
+    // the store side is the parquet scan joined against the
+    // broadcast probe keys BEFORE any aggregation — the store never
+    // shuffles; suffix windows don't exist on this path at all
+    assert(p.contains("Scan parquet"), p)
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert(!p.contains("Window"), p)
+    assert(!p.contains("SortMergeJoin"), p)
+    assert(!p.contains("CartesianProduct"), p)
   }
 
   test("bm25 rerank: candidate plumbing is broadcast-only, no SMJ, " +
@@ -606,6 +601,12 @@ class PlanSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"PLANS.md stale — entries without an audit row: " +
         s"${missing.toSeq.sorted.mkString(", ")}; " +
+        "regenerate with `sbt \"runMain graft.PlanStats\"`")
+    // and the other direction: a removed entry must not leave its row
+    val stale = audited.diff(SparkEntry.queries.keySet)
+    assert(stale.isEmpty,
+      s"PLANS.md stale — rows for entries no longer in SparkEntry: " +
+        s"${stale.toSeq.sorted.mkString(", ")}; " +
         "regenerate with `sbt \"runMain graft.PlanStats\"`")
   }
 }
