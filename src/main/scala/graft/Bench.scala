@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness — mirrors the reference's
   * `benchmark/test_tpch.py:75-153` (load, per-query wall-clock, print)
   * with the driver's one-line-JSON contract.
@@ -115,16 +113,7 @@ object Bench {
     // mirror the reference harness: tables persisted before timing
     // (benchmark/test_tpch.py:114-115)
     sys.props("graft.cacheTables") = "true"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench", s"local[$cpus]", cpus.toInt)
     // calibration: one untimed JIT warm-up per probe, then the
     // recorded window-start readings (serial latency + multi-core
     // throughput — see the probe scaladocs; reading a window starts here)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.TpchFull
 
 /** Benchmark of the ORIGINAL full-column TPC-H surface
@@ -33,14 +32,7 @@ object BenchDbgen {
     // scale 5000 — sort/spill territory; AQE coalesces the excess
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
       math.max(cpus.toInt, scale * 6000 / 250000).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench-dbgen", s"local[$cpus]", shuffleParts.toInt)
     val ctx = TpchFull.DbgenCtx(spark, tblDir)
     // prime + persist all tables, untimed
     for (t <- Seq("lineitem", "orders", "customer", "supplier", "part",

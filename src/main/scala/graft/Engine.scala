@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine — every harness, test and
+  * benchmark builds its session here.
   *
   * The reference (`/root/reference/`, a dask/distributed fork) boots a
   * scheduler + N workers and connects a `Client`
@@ -12,9 +13,27 @@ import org.apache.spark.sql.SparkSession
   * placement (SURVEY.md §3-4).
   *
   * Scale posture: AQE on (runtime re-plan, skew-join splitting, shuffle
-  * coalescing), shuffle partitions sized for the local[32] test rig —
-  * on a real cluster this is a deploy-time knob, the query code never
+  * coalescing); shuffle partitions default to `GRAFT_SHUFFLE_PARTITIONS`
+  * (32), harnesses pass their core count and the test session 4 — on a
+  * real cluster this is a deploy-time knob, the query code never
   * hard-codes partition counts.
+  *
+  * Compiled code stays resident across a query stream, as the
+  * reference never recomputes a result it already holds
+  * (`client.py:1530-1533`). Spark's generated-code cache, keyed by
+  * source text, holds 100 classes by default; one 22-query TPC-H pass
+  * needs 300–500, so a repeated stream re-ran Janino and the JIT for
+  * most of its stages. 1000 entries hold that working set.
+  *
+  * The retained classes cost heap, paid for by the status store's
+  * completed-item history (1,000 executions, jobs and stages each by
+  * default), which only the web UI reads — disabled in every graft
+  * session; graft's tracers use their own listeners. Keeping 10 of
+  * each holds live heap within a few percent of the default cache's.
+  *
+  * Both blocks are STATIC confs, honoured only by the first session
+  * of a JVM (the cache is sized at the first compile, retention when
+  * the SparkContext starts); a later `getOrCreate` keeps them.
   */
 object Engine {
 
@@ -49,6 +68,13 @@ object Engine {
       // Spark 4 rejects by default; read as long and normalize in Ctx
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // static confs (see scaladoc): generated code stays resident
+      // across a query stream ...
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // ... paid for by completed-item history only the UI reads
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config("spark.ui.retainedJobs", "10")
+      .config("spark.ui.retainedStages", "10")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Batch SQL runner for the differential fuzz harness
   * (`tools/fuzz_gen.py` → this → `tools/selfcheck.py`): executes each
-  * generated query through the SAME session configuration the driver
-  * gate uses (GraftExtensions, UTC, nanos normalization, AQE) and
-  * dumps one parquet directory per query, so the existing selfcheck
+  * generated query through the SAME session `Verify` uses
+  * ([[Engine.session]]: GraftExtensions, UTC, nanos normalization,
+  * AQE) and dumps one parquet directory per query, so the existing selfcheck
   * compare (columns sorted, rows sorted, values exact) adjudicates
   * Spark-vs-DuckDB agreement on queries nobody hand-picked.
   *
@@ -95,16 +95,7 @@ object SqlBatch {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-sql-batch", s"local[$cpus]", cpus.toInt)
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "documents", "embeddings"))
       spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{Ctx, Extensions, Tpch}
 
@@ -18,6 +19,25 @@ class TpchSpec extends AnyFunSuite {
     val oracles = Tpch.oracles.keySet ++ Extensions.oracles.keySet
     assert(oracles.subsetOf(declared))
     assert(Tpch.queries.size == 22)
+  }
+
+  // Declared before the per-entry runs so the first stream starts cold.
+  test("a repeated TPC-H stream reuses its compiled code") {
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for ((_, fn) <- Tpch.queries.toSeq.sortBy(_._1))
+        fn(ctx).write.format("noop").mode("overwrite").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    val repeat = compiles()
+    assert(repeat * 10 < first,
+      s"the first stream compiled $first classes, the repeat $repeat")
+    // the static confs took effect through getOrCreate
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+    for (k <- Seq("spark.sql.ui.retainedExecutions",
+        "spark.ui.retainedJobs", "spark.ui.retainedStages"))
+      assert(spark.conf.get(k) == "10", k)
   }
 
   for ((name, fn) <- (Tpch.queries ++ Extensions.queries).toSeq.sortBy(_._1)) {
