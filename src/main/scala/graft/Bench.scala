@@ -1,5 +1,9 @@
 package graft
 
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ml.MLParity
+
 /** Benchmark harness — mirrors the reference's
   * `benchmark/test_tpch.py:75-153` (load, per-query wall-clock, print)
   * with the driver's one-line-JSON contract.
@@ -27,6 +31,14 @@ package graft
   *      cannot pollute heap/GC state for the numbers that matter;
   *   4. ML/array workloads last, each with inputs materialized before
   *      the timer starts.
+  *
+  * Every timed pass writes the entry's full result to the `noop` sink
+  * ([[materialize]]); [[phase]] is the only timing loop, shared with
+  * [[BenchDbgen]].
+  *
+  * Usage: runMain graft.Bench [name…] (SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_CPUS). Named entries are timed alone: same session and
+  * phases, twins still in their own later phase, no ML rungs.
   */
 object Bench {
 
@@ -108,6 +120,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val names = resolve(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // mirror the reference harness: tables persisted before timing
@@ -121,141 +134,26 @@ object Bench {
     calibrationProbeParallel(cpus.toInt)
     val calStart = calibrationProbe()
     val mtStart = calibrationProbeParallel(cpus.toInt)
-    val all = SparkEntry.queries
-    val names = all.keys.toSeq.sortBy { n =>
-      // numeric-aware sort: q1, q2, ..., q22, then extensions
-      val m = "^q(\\d+)$".r.findFirstMatchIn(n)
-      (m.isEmpty, m.map(_.group(1).toInt).getOrElse(0), n)
-    }
     // verification twins are correctness artifacts, not production
     // paths — timed in a separate later phase (see scaladoc)
     val (twins, core) =
       names.partition(n => n.endsWith("_md5") || n.endsWith("_exact"))
-    // failures are recorded as value -1 + an errors entry, never as a
-    // fast "success" timing
-    val errors = scala.collection.mutable.ListBuffer[String]()
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      try { f; name -> (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case e: Throwable =>
-          errors += s"$name: ${e.getClass.getSimpleName}"
-          name -> -1.0
-      }
-    }
-    // let allocation churn from the previous phase drain before timing
-    def gcSettle(): Unit = {
-      System.gc(); Thread.sleep(300); System.gc(); Thread.sleep(200)
-    }
+    val errors = mutable.ListBuffer[String]()
     // prime the table cache once, untimed
     for (t <- graft.sources.TableLoader.fixtureTables)
       try graft.sources.TableLoader.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }
-    // all raw measured passes per entry (2, or 3 after a retake), for
-    // auditability of the min-of-N methodology — emitted as "passes"
-    val rawPasses =
-      scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    // warm-up pass + GC settle + two measured passes + targeted
-    // settle-and-retake for stall-suspect entries (min of all), per
-    // phase
-    def phase(qs: Seq[String]): Seq[(String, Double)] = {
-      for (name <- qs)
-        try all(name)(spark, sfDir).count()
-        catch { case _: Throwable => () }
-      gcSettle()
-      val p1 = qs.map { name =>
-        timed(name) { all(name)(spark, sfDir).count() } }.toMap
-      gcSettle()
-      val p2 = qs.map { name =>
-        timed(name) { all(name)(spark, sfDir).count() } }.toMap
-      val suspects = qs.filter { n =>
-        val (a, b) = (p1(n), p2(n))
-        a >= 0 && b >= 0 && math.max(a, b) > 2 * math.min(a, b) &&
-          math.max(a, b) > 0.5
-      }
-      val p3 =
-        if (suspects.isEmpty) Map.empty[String, Double]
-        else {
-          gcSettle()
-          suspects.map { name =>
-            timed(name) { all(name)(spark, sfDir).count() } }.toMap
-        }
-      qs.map { n =>
-        val vals = Seq(p1(n), p2(n)) ++ p3.get(n)
-        rawPasses(n) = vals
-        val ok = vals.filter(_ >= 0)
-        n -> (if (ok.isEmpty) -1.0 else ok.min)
-      }
-    }
-    val coreResults = phase(core)
-    val twinResults = phase(twins)
-    gcSettle()
-    // array/ML workloads — the reference's own benchmark set
-    // (matrix_multiplication.py, svd_tall_skinny_matrix.py, kmeans.py,
-    // tree_reduction.py, parallelizing_svm.py; recorded numbers in
-    // BASELINE.md), scaled to this rig
-    import graft.ml.MLParity
-    val mlResults = Seq(
-      // 2048² with 256-blocks, chunks generated directly as blocks
-      // (the da.random analogue); pure-Java BLAS in this container
-      timed("ml_matmul_2k") {
-        val a = MLParity.randomBlockMatrix(spark, 2048, 256)
-        val b = MLParity.randomBlockMatrix(spark, 2048, 256, seed = 7L)
-        a.multiply(b).blocks.count()
-      },
-      timed("ml_svd_tallskinny") {
-        val m = new org.apache.spark.mllib.linalg.distributed.RowMatrix(
-          MLParity.randomMatrix(spark, 20000, 64, rowsPerBlock = 2048)
-            .rows.map(_.vector))
-        MLParity.svd(m, 16)
-      },
-      timed("ml_kmeans_embeddings") {
-        val feats = MLParity.embeddingFeatures(
-          spark.read.parquet(s"$sfDir/embeddings.parquet"))
-        // aggregate over the prediction column — with a bare count()
-        // Catalyst prunes the scoring expression out of the plan
-        MLParity.parallelPredict(feats, MLParity.kmeans(feats, k = 10))
-          .agg(org.apache.spark.sql.functions.sum("prediction"))
-          .collect()
-      },
-      timed("ml_treereduce_1m") {
-        val s = spark.sparkContext.range(0L, 1000000L, numSlices = 32)
-          .map(_.toDouble).treeReduce(_ + _, depth = 3)
-        require(s > 0)
-      },
-      // the reference's M7 exercise (parallelizing_svm.py:32-44).
-      // Convention (docs/BENCH_NOTES.md): PREDICT-ONLY — the 1M×64
-      // input is persisted and materialized BEFORE the timer, and the
-      // small fit is untimed, so the number is pure broadcast-scoring
-      // throughput. (The reference's own accounting is lazier: its
-      // timed predict also materializes the da.random input.)
-      {
-        val emb = MLParity.embeddingFeatures(
-          spark.read.parquet(s"$sfDir/embeddings.parquet"))
-        val model = MLParity.fitSvc(
-          emb.selectExpr("features", "cast(label < 5 as double) as label"))
-        val big = spark.createDataFrame(
-          MLParity.randomMatrix(spark, 1000000L, 64, rowsPerBlock = 65536)
-            .rows.map(r => Tuple1(
-              org.apache.spark.ml.linalg.Vectors.dense(r.vector.toArray))))
-          .toDF("features").persist()
-        big.count() // materialize outside the timer
-        // aggregate over the prediction column — with a bare count()
-        // Catalyst prunes the scoring UDF out of the plan entirely and
-        // the timer measures a cached-row count, not inference
-        val r = timed("ml_svc_predict_1m") {
-          MLParity.parallelPredictSvc(big, model)
-            .agg(org.apache.spark.sql.functions.sum("prediction"))
-            .collect()
-        }
-        big.unpersist()
-        r
-      })
+    val all = SparkEntry.queries
+    val timings = Seq(core, twins).filter(_.nonEmpty)
+      .flatMap(qs => phase(qs, n => all(n)(spark, sfDir), errors))
+    val rawPasses = timings.toMap
+    val mlResults =
+      if (args.nonEmpty) Seq.empty
+      else { gcSettle(); mlRungs(spark, sfDir, errors) }
     // emit per-query times in the stable display order (q1..q22,
     // extensions, twins interleaved alphabetically) regardless of the
     // phase each ran in
-    val byName = (coreResults ++ twinResults).toMap
-    val allResults = names.map(n => n -> byName(n)) ++ mlResults
+    val allResults = names.map(n => n -> best(rawPasses(n))) ++ mlResults
     val qs = allResults.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errs = errors.distinct.map(e => "\"" + e.replace("\"", "'") + "\"")
@@ -264,7 +162,9 @@ object Bench {
     val tpch = allResults
       .filter { case (n, v) => n.matches("^q\\d+$") && v >= 0 }
       .map(_._2).sum
-    val passes = rawPasses.map { case (k, vs) =>
+    // all raw measured passes per entry, for auditability of the
+    // min-of-N methodology
+    val passes = timings.map { case (k, vs) =>
       "\"" + k + "\":[" + vs.mkString(",") + "]"
     }.mkString("{", ",", "}")
     // compact headline first AND last: the driver's record keeps only a
@@ -308,4 +208,145 @@ object Bench {
     System.err.println(headline)
     spark.stop()
   }
+
+  /** The one timed action: write every row and column to Spark's
+    * `noop` sink (full materialization, no I/O). `count()` would let
+    * Catalyst prune projected work out of the plan, so the number
+    * would be the cost of counting rows, not of producing the entry.
+    */
+  private[graft] def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Let allocation churn from the previous phase drain before timing;
+    * also lets the ContextCleaner release dead checkpoint blocks.
+    */
+  private[graft] def gcSettle(): Unit = {
+    System.gc(); Thread.sleep(300); System.gc(); Thread.sleep(200)
+  }
+
+  /** The entry names a harness run covers: every `SparkEntry.queries`
+    * entry in display order (q1..q22, then extensions) when `names` is
+    * empty, else `names` in the given order. Any name that is not an
+    * entry throws `IllegalArgumentException` listing all of them, so a
+    * typo fails before a session starts instead of silently covering
+    * nothing.
+    */
+  private[graft] def resolve(names: Seq[String]): Seq[String] = {
+    val all = SparkEntry.queries.keySet
+    val unknown = names.filterNot(all)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown entries: ${unknown.distinct.mkString(", ")}")
+    if (names.nonEmpty) names.distinct
+    else all.toSeq.sortBy { n =>
+      // numeric-aware sort: q1, q2, ..., q22, then extensions
+      val m = "^q(\\d+)$".r.findFirstMatchIn(n)
+      (m.isEmpty, m.map(_.group(1).toInt).getOrElse(0), n)
+    }
+  }
+
+  /** Wall seconds of `f`; a failure is recorded as -1 plus an `errors`
+    * line, never as a fast "success" timing.
+    */
+  private def timed(errors: mutable.Buffer[String], name: String)(
+      f: => Unit): (String, Double) = {
+    val t0 = System.nanoTime()
+    try { f; name -> (System.nanoTime() - t0) / 1e9 }
+    catch {
+      case e: Throwable =>
+        errors += s"$name: ${e.getClass.getSimpleName}"
+        name -> -1.0
+    }
+  }
+
+  /** The one timing loop: an unmeasured warm-up pass, a GC settle, two
+    * measured passes, and a settled retake for entries whose two passes
+    * disagree by >2× (see the object scaladoc). Every pass times
+    * [[materialize]] of `run(name)`. Returns each entry's raw passes (2,
+    * or 3 after a retake), in `names` order; [[best]] reduces them.
+    */
+  private[graft] def phase(names: Seq[String], run: String => DataFrame,
+      errors: mutable.Buffer[String]): Seq[(String, Seq[Double])] = {
+    for (name <- names)
+      try materialize(run(name))
+      catch { case _: Throwable => () }
+    def pass(qs: Seq[String]): Map[String, Double] = {
+      gcSettle()
+      qs.map(n => timed(errors, n)(materialize(run(n)))).toMap
+    }
+    val p1 = pass(names)
+    val p2 = pass(names)
+    val suspects = names.filter { n =>
+      val (a, b) = (p1(n), p2(n))
+      a >= 0 && b >= 0 && math.max(a, b) > 2 * math.min(a, b) &&
+        math.max(a, b) > 0.5
+    }
+    val p3 = if (suspects.isEmpty) Map.empty[String, Double] else pass(suspects)
+    names.map(n => n -> (Seq(p1(n), p2(n)) ++ p3.get(n)))
+  }
+
+  /** The recorded time of one entry: the minimum of its clean passes,
+    * -1 if every pass failed.
+    */
+  private[graft] def best(passes: Seq[Double]): Double = {
+    val ok = passes.filter(_ >= 0)
+    if (ok.isEmpty) -1.0 else ok.min
+  }
+
+  /** Array/ML workloads — the reference's own benchmark set
+    * (matrix_multiplication.py, svd_tall_skinny_matrix.py, kmeans.py,
+    * tree_reduction.py, parallelizing_svm.py; recorded numbers in
+    * BASELINE.md), scaled to this rig. The RDD rungs keep their RDD
+    * actions, which do not prune.
+    */
+  private def mlRungs(spark: SparkSession, sfDir: String,
+      errors: mutable.Buffer[String]): Seq[(String, Double)] =
+    Seq(
+      // 2048² with 256-blocks, chunks generated directly as blocks
+      // (the da.random analogue); pure-Java BLAS without a native libblas
+      timed(errors, "ml_matmul_2k") {
+        val a = MLParity.randomBlockMatrix(spark, 2048, 256)
+        val b = MLParity.randomBlockMatrix(spark, 2048, 256, seed = 7L)
+        a.multiply(b).blocks.count()
+      },
+      timed(errors, "ml_svd_tallskinny") {
+        val m = new org.apache.spark.mllib.linalg.distributed.RowMatrix(
+          MLParity.randomMatrix(spark, 20000, 64, rowsPerBlock = 2048)
+            .rows.map(_.vector))
+        MLParity.svd(m, 16)
+      },
+      timed(errors, "ml_kmeans_embeddings") {
+        val feats = MLParity.embeddingFeatures(
+          spark.read.parquet(s"$sfDir/embeddings.parquet"))
+        materialize(
+          MLParity.parallelPredict(feats, MLParity.kmeans(feats, k = 10)))
+      },
+      timed(errors, "ml_treereduce_1m") {
+        val s = spark.sparkContext.range(0L, 1000000L, numSlices = 32)
+          .map(_.toDouble).treeReduce(_ + _, depth = 3)
+        require(s > 0)
+      },
+      // the reference's M7 exercise (parallelizing_svm.py:32-44).
+      // Convention (docs/BENCH_NOTES.md): PREDICT-ONLY — the 1M×64
+      // input is persisted and materialized BEFORE the timer, and the
+      // small fit is untimed, so the number is pure broadcast-scoring
+      // throughput. (The reference's own accounting is lazier: its
+      // timed predict also materializes the da.random input.)
+      {
+        val emb = MLParity.embeddingFeatures(
+          spark.read.parquet(s"$sfDir/embeddings.parquet"))
+        val model = MLParity.fitSvc(
+          emb.selectExpr("features", "cast(label < 5 as double) as label"))
+        val big = spark.createDataFrame(
+          MLParity.randomMatrix(spark, 1000000L, 64, rowsPerBlock = 65536)
+            .rows.map(r => Tuple1(
+              org.apache.spark.ml.linalg.Vectors.dense(r.vector.toArray))))
+          .toDF("features").persist()
+        big.count() // materialize outside the timer
+        val r = timed(errors, "ml_svc_predict_1m") {
+          materialize(MLParity.parallelPredictSvc(big, model))
+        }
+        big.unpersist()
+        r
+      })
 }

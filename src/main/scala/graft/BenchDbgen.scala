@@ -8,9 +8,10 @@ import graft.queries.TpchFull
   * which ran dbgen `.tbl` at ~2 GB
   * (`/root/reference/benchmark/test_tpch.py:26-35,69-72`). Tables are
   * read from `.tbl` and persisted before timing (the reference's
-  * `client.persist`, `test_tpch.py:114-115`), then each of the 22
-  * queries gets a warm-up pass, a GC settle, and one measured pass —
-  * the [[Bench]] methodology.
+  * `client.persist`, `test_tpch.py:114-115`), then the 22 queries run
+  * through [[Bench.phase]] — warm-up, GC settle, min of two measured
+  * passes (plus a retake on >2× disagreement), each through the `noop`
+  * sink: the [[Bench]] methodology.
   *
   * Usage: runMain graft.BenchDbgen [tblDir] [scale]
   * Generates the deterministic [[graft.sources.DbgenGen]] fixture into
@@ -40,22 +41,13 @@ object BenchDbgen {
       ctx.t(t).count()
     val names = TpchFull.queries.keys.toSeq
       .sortBy(n => n.drop(1).toInt)
-    for (n <- names)
-      try TpchFull.queries(n)(ctx).count()
-      catch { case _: Throwable => () }
-    System.gc(); Thread.sleep(300); System.gc(); Thread.sleep(200)
     val errors = scala.collection.mutable.ListBuffer[String]()
-    val results = names.map { n =>
-      val t0 = System.nanoTime()
-      try { TpchFull.queries(n)(ctx).count(); n -> (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        errors += s"$n: ${e.getClass.getSimpleName}"; n -> -1.0
-      }
-    }
+    val results = Bench.phase(names, n => TpchFull.queries(n)(ctx), errors)
+      .map { case (n, passes) => n -> Bench.best(passes) }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"dbgen_total","value":$total,"unit":"sec","queries":$qs,"errors":[${errors.map("\"" + _ + "\"").mkString(",")}],"scale":$scale}"""
+    val json = s"""{"metric":"dbgen_total","value":$total,"unit":"sec","queries":$qs,"errors":[${errors.distinct.map("\"" + _ + "\"").mkString(",")}],"scale":$scale}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DBGEN.json"),
       (json + "\n").getBytes("UTF-8"))
     println(json)

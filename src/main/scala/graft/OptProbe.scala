@@ -7,7 +7,9 @@ import graft.operators.Dedup
   * cost into its sequential phases (edge generation vs the CC
   * star-contraction fixpoint vs resolution) so the optimization work
   * targets the measured term, not a guess (guide §1). Ad-hoc, cheap,
-  * fixture-only — not part of the bench contract.
+  * fixture-only — not part of the bench contract. Each phase is timed
+  * after a [[Bench.gcSettle]], through [[Bench.materialize]] or an
+  * eager checkpoint.
   *
   * Usage: runMain graft.OptProbe [sfDir]
   */
@@ -19,6 +21,7 @@ object OptProbe {
     val docs = graft.queries.Ctx(spark, dir).documents
 
     def time[A](name: String)(f: => A): A = {
+      Bench.gcSettle()
       val t0 = System.nanoTime()
       val r = f
       println(f"[probe] $name%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
@@ -26,14 +29,11 @@ object OptProbe {
     }
 
     // warm-up: tables + codegen for the whole pipeline once
-    Dedup.clustersLshMd5(docs).count()
+    Bench.materialize(Dedup.clustersLshMd5(docs))
 
     // phase split, each timed on a warm JVM
     val edges = time("minhash_lsh_md5 edges (eager)") {
-      val e = Dedup.minHashLshMd5(docs).select("d1", "d2")
-        .localCheckpoint()
-      e.count()
-      e
+      Dedup.minHashLshMd5(docs).select("d1", "d2").localCheckpoint()
     }
     val nodes = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       .select(col("doc_id").as("node"))
@@ -44,65 +44,13 @@ object OptProbe {
     println(s"[probe] cc rounds taken: $rounds, labels: ${lbl.count()}")
     time("clusterize tail (sizes+join)") {
       val sizes = lbl.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
-      lbl.join(sizes.hint("shuffle_hash"), "lbl").count()
+      Bench.materialize(lbl.join(sizes.hint("shuffle_hash"), "lbl"))
     }
     time("full clustersLshMd5 entry") {
-      Dedup.clustersLshMd5(docs).count()
+      Bench.materialize(Dedup.clustersLshMd5(docs))
     }
     time("full clusters (exact) entry") {
-      Dedup.clusters(docs).count()
-    }
-
-    // --- md5 signature pipeline replica (timing only) ---------------
-    val sample = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val shingleArr =
-      """CASE WHEN size(ws) >= 3
-        |  THEN transform(sequence(0, size(ws) - 3),
-        |         i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))
-        |  ELSE array(concat_ws(' ', ws)) END""".stripMargin
-    val sh = sample
-      .select(col("doc_id"), graft.functions.TextFunctions.words(col("text")).as("ws"))
-      .select(col("doc_id"), explode(expr(shingleArr)).as("sh")).distinct()
-    time("replica: shingles distinct") { sh.count() }
-    val mins = sh
-      .select(col("doc_id"), col("sh"),
-        explode(expr("sequence(0, 15)")).as("seed"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat(CAST(seed AS STRING), ':', sh)), 1, 15), 16, 10) AS BIGINT)"))
-      .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-    time("replica: md5 mins (16 seeds)") { mins.count() }
-    val sigs = mins.groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(seed, mh))), x -> x.mh)").as("sig"))
-    time("replica: sigs collect") { sigs.count() }
-
-    // --- star-forest check cost on the converged edge frame ---------
-    val e = edges.select(greatest(col("d1"), col("d2")).as("u"),
-      least(col("d1"), col("d2")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    e.count()
-    time("old isStarForest x3") {
-      (1 to 3).foreach { _ =>
-        val childIsRoot = e.select("u")
-          .join(e.select(col("v").as("u")).hint("shuffle_hash"),
-            Seq("u"), "left_semi")
-        val multiParent = e.groupBy("u")
-          .agg(countDistinct(col("v")).as("np"))
-          .where(col("np") > 1).select("u")
-        childIsRoot.unionAll(multiParent).isEmpty
-      }
-    }
-    time("new isStarForest x3 (one agg)") {
-      (1 to 3).foreach { _ =>
-        val vt = e.schema("v").dataType
-        e.select(col("u").as("n"), col("v").as("p"))
-          .unionAll(e.select(col("v").as("n"),
-            lit(null).cast(vt).as("p")))
-          .groupBy("n")
-          .agg(count(col("p")).as("nc"), count(lit(1)).as("tot"))
-          .where(col("nc") > 1 ||
-            (col("nc") > 0 && col("nc") < col("tot")))
-          .isEmpty
-      }
+      Bench.materialize(Dedup.clusters(docs))
     }
     spark.stop()
   }

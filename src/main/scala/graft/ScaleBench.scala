@@ -125,19 +125,28 @@ object ScaleBench {
     val src = "/root/testdata/sf0.1"
     val heavy = Seq("q1", "q5", "q9", "q17", "q18", "q21")
 
+    // The ladders time `count()`, not Bench's noop sink: the slopes in
+    // docs/SCALE.md and docs/BENCH_NOTES.md were measured that way, and
+    // a ladder is read against its own earlier rungs.
     def time(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = f
       ((System.nanoTime() - t0) / 1e9, n)
     }
-    // between a warm-up construction and its measured run: the
-    // warm-up's eagerly-materialized localCheckpoint blocks are only
-    // released by the ContextCleaner AFTER a JVM GC notices the
-    // dropped references — without this, the dead blocks squeeze
-    // execution memory for the measured pass (the Bench methodology's
-    // gcSettle, r3; the residual in-sweep vs isolated gap of r8/r9)
-    def settle(): Unit = {
-      System.gc(); Thread.sleep(200); System.gc(); Thread.sleep(100)
+    // `time` plus the longest task (the straggler rungs' signal)
+    def timedMaxTask(body: => Long): (Double, Long, Long) = {
+      val maxMs = new java.util.concurrent.atomic.AtomicLong(0L)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (te.taskInfo != null)
+            maxMs.getAndAccumulate(te.taskInfo.duration, math.max(_, _))
+      }
+      spark.sparkContext.addSparkListener(l)
+      val (sec, rows) = time(body)
+      Thread.sleep(500) // listener bus is async; let task-end events drain
+      spark.sparkContext.removeSparkListener(l)
+      (sec, maxMs.get, rows)
     }
 
     section("tpch") {
@@ -221,7 +230,7 @@ object ScaleBench {
         for (q <- pipelineOps) {
           try SparkEntry.queries(q)(spark, dir).count()
           catch { case _: Throwable => () }
-          settle()
+          Bench.gcSettle()
           val (sec, rows) = time(SparkEntry.queries(q)(spark, dir).count())
           println(f"$mult%-6d$q%-22s$sec%8.2f$rows%10d")
         }
@@ -388,7 +397,7 @@ object ScaleBench {
         }
         // warm-up, then measured probe
         graft.operators.Dedup.containmentFromStore(store, ctDelta).count()
-        settle()
+        Bench.gcSettle()
         val (psec, rows) = time(
           graft.operators.Dedup.containmentFromStore(store, ctDelta).count())
         // measured append, then sweep the new batch dirs so the store
@@ -399,7 +408,7 @@ object ScaleBench {
             .map(_.getPath.getName).toSet
         val subs = Seq("chunks", "shingles", "sizes")
         val before = subs.map(s => s -> batchDirs(s)).toMap
-        settle()
+        Bench.gcSettle()
         val (asec, _) = time {
           graft.operators.Dedup.appendToContainmentStore(ctDelta, store)
           1L
@@ -472,9 +481,9 @@ object ScaleBench {
           indexPath = Some(s"$scratch/index"),
           profilePath = Some(s"$scratch/profile"))
         freshScratch(); run() // warm-up
-        freshScratch(); settle()
+        freshScratch(); Bench.gcSettle()
         val (sec, _) = time { require(run(), "batch skipped"); 1L }
-        settle()
+        Bench.gcSettle()
         val (rsec, rows) = time(graft.operators.Dedup
           .keepBestFromStore(docsAll, s"$scratch/map").count())
         println(f"$mult%-6d$bsec%10.2f$sec%10.2f$rsec%11.2f$rows%9d")
@@ -509,7 +518,7 @@ object ScaleBench {
         new org.apache.hadoop.fs.Path(root), fs,
         new org.apache.hadoop.fs.Path(scratch), false, conf)
       def readTime(): Double = {
-        settle()
+        Bench.gcSettle()
         val (s, _) = time(graft.operators.Dedup
           .readClusterMap(spark, s"$scratch/map").count())
         s
@@ -517,7 +526,7 @@ object ScaleBench {
       println(f"${"batch"}%-7s${"append_s"}%9s")
       for (k <- 0 until 8) {
         val delta = docsAll.filter(col("doc_id") % 24 === k)
-        settle()
+        Bench.gcSettle()
         val (s, _) = time {
           graft.operators.Dedup.appendToClusterMap(s"$scratch/map",
             s"$scratch/sigs", delta)
@@ -817,7 +826,7 @@ object ScaleBench {
           .semanticDedupIncremental(store, delta, tau = 0.3)
           .filter(col("is_dup")).count()
         run()
-        settle()
+        Bench.gcSettle()
         val (sec, dups) = time(run())
         println(f"$n%-9d$cells%7d$sec%8.2f$dups%7d")
       }
@@ -836,9 +845,9 @@ object ScaleBench {
       def runP(prune: Boolean): Long = graft.operators.Similarity
         .semanticDedupIncremental(bigStore, one, tau = 0.3,
           pruneCells = prune).count()
-      runP(true); settle()
+      runP(true); Bench.gcSettle()
       val (ps, _) = time(runP(true))
-      settle()
+      Bench.gcSettle()
       val (fs2, _) = time(runP(false))
       println(f"${"pruned"}%-9s$ps%8.2f   ${"full"}%-7s$fs2%8.2f")
 
@@ -910,9 +919,9 @@ object ScaleBench {
               Window.orderBy(col("v"), col("id"))).cast("bigint"))
             .agg(max("rnk")).collect().head.getLong(0)
         }
-        kernel(); settle()
+        kernel(); Bench.gcSettle()
         val (ks, kr) = time(kernel())
-        settle()
+        Bench.gcSettle()
         val (ws, wr) = time(window())
         require(kr == n && wr == n, s"rank mismatch: $kr / $wr vs $n")
         println(f"$n%-10d$ks%9.2f$ws%9.2f")
@@ -932,22 +941,6 @@ object ScaleBench {
       // component grows (map-side partials split it), the window's
       // grows linearly with the component.
       println("== Giant-cluster resolution: agg (r9) vs window (r8) ==")
-      def timedMaxTask(body: => Long): (Double, Long, Long) = {
-        val maxMs = new java.util.concurrent.atomic.AtomicLong(0L)
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.taskInfo != null)
-              maxMs.getAndAccumulate(te.taskInfo.duration, math.max(_, _))
-        }
-        spark.sparkContext.addSparkListener(l)
-        val t0 = System.nanoTime()
-        val rows = body
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener bus is async; let task-end events drain
-        spark.sparkContext.removeSparkListener(l)
-        (sec, maxMs.get, rows)
-      }
       val corpus = spark.read.parquet(s"$src/documents.parquet")
         .select("doc_id", "text")
       def windowKeepBest(docs: DataFrame, clusters: DataFrame): Long = {
@@ -1011,22 +1004,6 @@ object ScaleBench {
       // max-task time — the agg's stays flat as the hot source grows,
       // the window's grows linearly with it.
       println("== Giant-source quota: agg (r10) vs window (r9) ==")
-      def timedMaxTask(body: => Long): (Double, Long, Long) = {
-        val maxMs = new java.util.concurrent.atomic.AtomicLong(0L)
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.taskInfo != null)
-              maxMs.getAndAccumulate(te.taskInfo.duration, math.max(_, _))
-        }
-        spark.sparkContext.addSparkListener(l)
-        val t0 = System.nanoTime()
-        val rows = body
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener bus is async; let task-end events drain
-        spark.sparkContext.removeSparkListener(l)
-        (sec, maxMs.get, rows)
-      }
       val corpusDocs = spark.read.parquet(s"$src/documents.parquet")
         .select("doc_id", "source", "n_chars")
       def windowQuota(docs: DataFrame, quota: Int): Long = {
@@ -1256,7 +1233,7 @@ object ScaleBench {
         val d2 = deltaDocs.withColumn("doc_id",
           col("doc_id") + lit(900000000L))
         graft.operators.SearchIndex.appendToIndexStore(store, deltaDocs)
-        settle()
+        Bench.gcSettle()
         val (asec, _) = time {
           graft.operators.SearchIndex.appendToIndexStore(store, d2); 1L
         }
@@ -1290,12 +1267,12 @@ object ScaleBench {
             docs.filter(pmod(col("doc_id"), lit(K.toLong)) === i))
         def probe(): Long =
           graft.operators.SearchIndex.bm25FromStore(spark, store).count()
-        probe(); settle()
+        probe(); Bench.gcSettle()
         val (pk, _) = time(probe())
         val (cs, folded) = time(
           graft.operators.SearchIndex.compactIndexStore(spark, store)
             .toLong)
-        probe(); settle()
+        probe(); Bench.gcSettle()
         val (p1, _) = time(probe())
         println(f"${"bm25"}%-8s$K%6d$pk%10.2f$cs%10.2f$p1%10.2f$folded%8d")
       }
@@ -1312,12 +1289,12 @@ object ScaleBench {
             base.filter(pmod(col("doc_id"), lit(K.toLong)) === i), store)
         def probe(): Long = graft.operators.Dedup
           .containmentFromStore(store, delta).count()
-        probe(); settle()
+        probe(); Bench.gcSettle()
         val (pk, _) = time(probe())
         val (cs, folded) = time(
           graft.operators.Dedup.compactContainmentStore(spark, store)
             .toLong)
-        probe(); settle()
+        probe(); Bench.gcSettle()
         val (p1, _) = time(probe())
         println(f"${"ctstore"}%-8s$K%6d$pk%10.2f$cs%10.2f$p1%10.2f$folded%8d")
       }
@@ -1391,21 +1368,21 @@ object ScaleBench {
         def irerank(cap: Long): Long =
           graft.operators.SearchIndex.rerankFromStore(spark, ixStore,
             queryTable = qt, maxPushdownIds = cap).count()
-        retrieve(); settle()
+        retrieve(); Bench.gcSettle()
         val (rs, _) = time(retrieve())
-        rerank(graft.operators.Search.defaultMaxPushdownIds); settle()
+        rerank(graft.operators.Search.defaultMaxPushdownIds); Bench.gcSettle()
         val (ks, rows) =
           time(rerank(graft.operators.Search.defaultMaxPushdownIds))
         // the over-cap branch gets its own warm-up too (its
         // shuffle_hash semi-join codegen is distinct from the
         // within-cap plan's — an unwarmed first-ever execution at the
         // bottom rung would land JIT inside the measured window)
-        rerank(0L); settle()
+        rerank(0L); Bench.gcSettle()
         val (os, _) = time(rerank(0L))
-        irerank(graft.operators.Search.defaultMaxPushdownIds); settle()
+        irerank(graft.operators.Search.defaultMaxPushdownIds); Bench.gcSettle()
         val (is_, _) =
           time(irerank(graft.operators.Search.defaultMaxPushdownIds))
-        irerank(0L); settle()
+        irerank(0L); Bench.gcSettle()
         val (ios, _) = time(irerank(0L))
         println(f"$mult%-6d${qt.size}%8d$rs%11.2f$ks%10.2f$os%11.2f" +
           f"$is_%9.2f$ios%10.2f$rows%7d")
@@ -1483,7 +1460,7 @@ object ScaleBench {
           graft.operators.Search.phraseSearch(docs).count()
         def probe(): Long = graft.operators.SearchIndex
           .phraseFromStore(spark, store).count()
-        fresh(); probe(); settle()
+        fresh(); probe(); Bench.gcSettle()
         val (fsec, rows) = time(fresh())
         val (ssec, _) = time(probe())
         println(f"$mult%-6d$fsec%9.2f$ssec%9.2f$rows%7d")
@@ -1512,7 +1489,7 @@ object ScaleBench {
       def probe(): Long =
         graft.operators.SearchIndex.bm25FromStore(spark, store).count()
       def probeMin(): Double = {
-        probe(); settle()
+        probe(); Bench.gcSettle()
         val (a, _) = time(probe()); val (b, _) = time(probe())
         math.min(a, b)
       }
@@ -1544,7 +1521,7 @@ object ScaleBench {
       def cprobe(): Long = graft.operators.Dedup
         .containmentFromStore(cstore, delta).count()
       def cprobeMin(): Double = {
-        cprobe(); settle()
+        cprobe(); Bench.gcSettle()
         val (a, _) = time(cprobe()); val (b, _) = time(cprobe())
         math.min(a, b)
       }

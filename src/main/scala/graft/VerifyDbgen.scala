@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.queries.TpchFull
 
 /** Correctness dump for the ORIGINAL full-column TPC-H surface over
@@ -17,27 +15,10 @@ object VerifyDbgen {
   def main(args: Array[String]): Unit = {
     val Array(tblDir, outDir) = args
     val spark = Engine.session("graft-verify-dbgen")
-    new java.io.File(outDir).mkdirs()
     val ctx = TpchFull.DbgenCtx(spark, tblDir)
-    TpchFull.queries.foreach { case (name, fn) =>
-      try fn(ctx).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify-dbgen] $name failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = TpchFull.oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.dump(outDir,
+      TpchFull.queries.toSeq.map { case (n, fn) => n -> (() => fn(ctx)) },
+      TpchFull.oracles)
     spark.stop()
   }
 }

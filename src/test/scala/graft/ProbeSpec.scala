@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Laws for the bench calibration probes (fixed work, JIT-elision
-  * sink, parallel fan-out) — measurement harness code deserves the
-  * same spec coverage as operators: a probe that silently stops doing
-  * its work would re-open the blind window class it exists to detect.
+/** Laws for the bench harness: the calibration probes (fixed work,
+  * JIT-elision sink, parallel fan-out), the entry-name resolver and the
+  * timed action — measurement harness code deserves the same spec
+  * coverage as operators: a probe that silently stops doing its work
+  * would re-open the blind window class it exists to detect, and a
+  * timer that lets the optimizer skip work measures the wrong thing.
   */
 class ProbeSpec extends AnyFunSuite {
 
@@ -31,5 +33,34 @@ class ProbeSpec extends AnyFunSuite {
     val one = Bench.calibrationProbeParallel(1)
     val four = Bench.calibrationProbeParallel(4)
     assert(one > 0 && four > 0)
+  }
+
+  test("entry resolver: unknown names throw and are named; known names " +
+    "keep their order; no names means every entry") {
+    val e = intercept[IllegalArgumentException](
+      Bench.resolve(Seq("q1", "no_such_entry", "q6", "typo_q")))
+    assert(e.getMessage.contains("no_such_entry"))
+    assert(e.getMessage.contains("typo_q"))
+    assert(!e.getMessage.contains("q6"))
+    assert(Bench.resolve(Seq("q6", "q1", "dedup_spans")) ==
+      Seq("q6", "q1", "dedup_spans"))
+    val all = Bench.resolve(Nil)
+    assert(all.toSet == SparkEntry.queries.keySet)
+    assert(all.size == SparkEntry.queries.size)
+    assert(all.take(3) == Seq("q1", "q2", "q3"))
+  }
+
+  test("timed action: count() prunes a projected UDF column, " +
+    "materialize computes every row of it") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val spark = TestSpark.spark
+    val calls = spark.sparkContext.longAccumulator("udf-calls")
+    val bump = udf { (x: Long) => calls.add(1); x * 2 }
+    val df = spark.range(0L, 1000L, 1L, 4)
+      .select(col("id"), bump(col("id")).as("doubled"))
+    assert(df.count() == 1000L)
+    assert(calls.value == 0L)
+    Bench.materialize(df)
+    assert(calls.value == 1000L)
   }
 }
