@@ -122,18 +122,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val names = resolve(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.harnessCpus
     // mirror the reference harness: tables persisted before timing
     // (benchmark/test_tpch.py:114-115)
     sys.props("graft.cacheTables") = "true"
-    val spark = Engine.session("graft-bench", s"local[$cpus]", cpus.toInt)
+    val spark = Engine.session("graft-bench", s"local[$cpus]", cpus)
     // calibration: one untimed JIT warm-up per probe, then the
     // recorded window-start readings (serial latency + multi-core
     // throughput — see the probe scaladocs; reading a window starts here)
     calibrationProbe()
-    calibrationProbeParallel(cpus.toInt)
+    calibrationProbeParallel(cpus)
     val calStart = calibrationProbe()
-    val mtStart = calibrationProbeParallel(cpus.toInt)
+    val mtStart = calibrationProbeParallel(cpus)
     // verification twins are correctness artifacts, not production
     // paths — timed in a separate later phase (see scaladoc)
     val (twins, core) =
@@ -179,14 +179,14 @@ object Bench {
       try dev.ludovic.netlib.blas.BLAS.getInstance().getClass.getSimpleName
       catch { case _: Throwable => "unavailable" }
     val calEnd = calibrationProbe()
-    val mtEnd = calibrationProbeParallel(cpus.toInt)
+    val mtEnd = calibrationProbeParallel(cpus)
     // self-attribution (r17): the mt contention threshold is a ledger
     // fact now (BENCH_NOTES — 0.80 s at either edge at 32 threads ⇒
     // contended window, re-measure); stamp the verdict into the JSON
     // so a driver-run window carries its own attribution. Calibrated
     // ONLY for 32 threads — other thread counts emit no flag.
     val contended =
-      if (cpus.toInt == 32)
+      if (cpus == 32)
         s""","mt_contended":${mtStart > 0.80 || mtEnd > 0.80}"""
       else ""
     val cal = f"""{"start":$calStart%.3f,"end":$calEnd%.3f,""" +

@@ -27,12 +27,12 @@ object BenchDbgen {
       graft.sources.DbgenGen.write(tblDir, scale)
     }
     sys.props("graft.cacheTables") = "true"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.harnessCpus
     // shuffle partitions sized to data (≈1 per ~250k lineitem rows,
     // min cpus): a fixed 32 means ~1M wide rows per partition at
     // scale 5000 — sort/spill territory; AQE coalesces the excess
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(cpus.toInt, scale * 6000 / 250000).toString)
+      math.max(cpus, scale * 6000 / 250000).toString)
     val spark = Engine.session("graft-bench-dbgen", s"local[$cpus]", shuffleParts.toInt)
     val ctx = TpchFull.DbgenCtx(spark, tblDir)
     // prime + persist all tables, untimed

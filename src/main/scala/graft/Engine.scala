@@ -37,6 +37,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
+  /** Core count of every harness main's `local[n]` session (Bench,
+    * Verify, SqlBatch, BenchDbgen, OptProbe, ScaleBench):
+    * `SPARK_GRAFT_CPUS`, default 4.
+    */
+  def harnessCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   def session(
       appName: String = "graft",
       master: String = sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
@@ -57,9 +63,9 @@ object Engine {
       // dimension-filtered fact joins at 100 TB)
       // NOTE: the runtime-filter size caps stay at their defaults
       // (4M items / 67M bits) — deliberately small for the planner's
-      // auto-injected filters. The explicit BloomGate ingest gates
-      // need far bigger filters (up to 1e9 keys / 1 GiB for a store
-      // sidecar) and raise the caps SCOPED to their own build job
+      // auto-injected filters. The explicit BloomGate fingerprint gate
+      // sizes its filter to the base corpus (up to 1e9 keys / 1 GiB)
+      // and raises the caps SCOPED to its own build job
       // (BloomGate.withScopedCaps), so a misestimated plan can never
       // materialize a gigabyte-scale injected filter session-wide.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")

@@ -17,7 +17,8 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     sys.props("graft.cacheTables") = "true"
-    val spark = Engine.session("graft-opt-probe", master = "local[32]")
+    val spark = Engine.session("graft-opt-probe",
+      master = s"local[${Engine.harnessCpus}]")
     val docs = graft.queries.Ctx(spark, dir).documents
 
     def time[A](name: String)(f: => A): A = {

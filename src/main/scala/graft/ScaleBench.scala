@@ -121,7 +121,8 @@ object ScaleBench {
       else None
     def section(name: String)(body: => Unit): Unit =
       if (sections(name)) body
-    val spark = Engine.session("graft-scale-bench", master = "local[32]")
+    val spark = Engine.session("graft-scale-bench",
+      master = s"local[${Engine.harnessCpus}]")
     val src = "/root/testdata/sf0.1"
     val heavy = Seq("q1", "q5", "q9", "q17", "q18", "q21")
 
@@ -656,32 +657,6 @@ object ScaleBench {
         val (bsec, _) = time(
           graft.operators.Dedup.incrementalExactBloom(docsAll).count())
         println(f"$mult%-6d$nDelta%9d$suspect%9d$psec%9.2f$bsec%9.2f")
-      }
-      // the LSH signature-store gate: same store, probed through the
-      // sidecar — delta band rows with no possible base bucket-mates
-      // never enter the band join
-      println(f"${"mult"}%-6s${"ungated_s"}%10s${"gated_s"}%9s${"rows"}%8s")
-      val delta = spark.read.parquet(s"$src/documents.parquet")
-        .filter(col("doc_id") % 3 === 0)
-      for (mult <- factMults) {
-        val dir =
-          if (mult == 1) src
-          else ampCorpusDir(mult)
-        val base = spark.read.parquet(s"$dir/documents.parquet")
-          .filter(col("doc_id") % 3 =!= 0)
-        val store = s"/tmp/graft_sigstore_scale_p1_$mult"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(store)))
-          graft.operators.Dedup.writeSignatureStore(base, store)
-        graft.operators.Dedup.ensureStoreBloom(spark, store) // sidecar upgrade
-        graft.operators.Dedup.incrementalLshStore(store, delta).count()
-        val (usec, _) = time(
-          graft.operators.Dedup.incrementalLshStore(store, delta).count())
-        graft.operators.Dedup.incrementalLshStoreBloom(store, delta).count()
-        val (gsec, rows) = time(
-          graft.operators.Dedup.incrementalLshStoreBloom(store, delta).count())
-        println(f"$mult%-6d$usec%10.2f$gsec%9.2f$rows%8d")
       }
     }
 

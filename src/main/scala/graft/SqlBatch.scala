@@ -94,8 +94,8 @@ object SqlBatch {
   } + "\""
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.session("graft-sql-batch", s"local[$cpus]", cpus.toInt)
+    val cpus = Engine.harnessCpus
+    val spark = Engine.session("graft-sql-batch", s"local[$cpus]", cpus)
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "documents", "embeddings"))
       spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)

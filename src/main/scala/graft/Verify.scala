@@ -9,8 +9,8 @@ object Verify {
     // iteration; the driver always passes exactly two)
     val (sfDir, outDir) = (args(0), args(1))
     val names = Bench.resolve(args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.session("graft-verify", s"local[$cpus]", cpus.toInt)
+    val cpus = Engine.harnessCpus
+    val spark = Engine.session("graft-verify", s"local[$cpus]", cpus)
     val all = SparkEntry.queries
     dump(outDir, names.map(n => n -> (() => all(n)(spark, sfDir))),
       SparkEntry.oracleSql)

@@ -19,11 +19,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * the pipeline, on EVERY batch, even though the overwhelming
   * majority of new keys were never seen. A Bloom filter over the
   * store's keys is megabytes per billion keys (`optimalNumOfBits`:
-  * ~1.2 GB per 10⁹ at 1% fpp — broadcastable; shard per band/bucket
-  * beyond that), has NO false negatives, and turns the common case
-  * into a map-side codegen'd probe: bloom-negative ⇒ definitely new,
-  * skip the join entirely; only the tiny bloom-positive slice (true
-  * dups + fpp stragglers) pays for exact verification. Results stay
+  * ~1.2 GB per 10⁹ at 1% fpp — broadcastable), has NO false
+  * negatives, and turns the common case into a map-side codegen'd
+  * probe: bloom-negative ⇒ definitely new, skip the join entirely;
+  * only the tiny bloom-positive slice (true dups + fpp stragglers)
+  * pays for exact verification. Results stay
   * EXACT — the filter only routes rows, it never decides a verdict.
   *
   * The reference's dedup surface is the hash-partitioned
@@ -52,9 +52,9 @@ object BloomGate {
   def numBits(expectedItems: Long, fpp: Double): Long =
     math.max(64L, BloomFilter.optimalNumOfBits(math.max(expectedItems, 1L), fpp))
 
-  /** graft's own single-filter ceilings: 10⁹ keys / 1 GiB. Past these
-    * the design answer is one filter per band/shard, not a bigger
-    * filter. A build whose geometry exceeds the session's
+  /** graft's own single-filter ceilings: 10⁹ keys / 1 GiB; a larger
+    * key set gets a clamped, less selective filter ([[geometry]]), not
+    * a bigger one. A build whose geometry exceeds the session's
     * `BloomFilterAggregate` caps raises them FOR THE BUILD JOB ONLY
     * ([[withScopedCaps]]), so the optimizer's auto-injected runtime
     * filters keep their deliberately small defaults (4M items / 67M
@@ -96,19 +96,16 @@ object BloomGate {
     * [[MaxItems]]/[[MaxBits]]. A clamp means the filter is under-sized
     * for the key count and its fpp degrades toward all-positive —
     * still never a false negative, so gating stays CORRECT, just less
-    * selective; past the 1 GiB single-filter ceiling shard per band.
+    * selective.
     */
-  def geometry(spark: org.apache.spark.sql.SparkSession,
-      expectedItems: Long, fpp: Double): (Long, Long) = {
+  def geometry(expectedItems: Long, fpp: Double): (Long, Long) = {
     val n = math.min(math.max(expectedItems, 1L), MaxItems)
     (n, math.min(numBits(n, fpp), MaxBits))
   }
 
   /** Distributed build: ONE aggregation job over `df` (map-side
     * partial filters OR-merged on the driver by the aggregate), no
-    * collect of keys. Returns the serialized filter. Pass the same
-    * (`expectedItems`, `bits`) when building filters that must later
-    * [[merge]] — merge requires identical geometry.
+    * collect of keys. Returns the serialized filter.
     */
   def build(df: DataFrame, value: Column, expectedItems: Long,
       bits: Long): Array[Byte] = {
@@ -120,8 +117,8 @@ object BloomGate {
       df.select(GraftExpressionBridge.column(agg).as("bloom")).head()
     }
     if (row.isNullAt(0)) {
-      // the aggregate yields null on empty input; an empty filter of
-      // the SAME geometry keeps merge compatibility
+      // the aggregate yields null on empty input: an empty filter of
+      // the same geometry
       toBytes(BloomFilter.create(n, bits))
     } else row.getAs[Array[Byte]](0)
   }
@@ -131,60 +128,8 @@ object BloomGate {
     */
   def build(df: DataFrame, value: Column, expectedItems: Long,
       fpp: Double): Array[Byte] = {
-    val (n, bits) = geometry(df.sparkSession, expectedItems, fpp)
+    val (n, bits) = geometry(expectedItems, fpp)
     build(df, value, n, bits)
-  }
-
-  /** [[build]] fused with a row count — ONE aggregation job where a
-    * caller needs both (the per-batch append path: the count drives
-    * the capacity decision, the filter the merge).
-    */
-  def buildWithCount(df: DataFrame, value: Column, expectedItems: Long,
-      bits: Long): (Array[Byte], Long) = {
-    val n = math.max(expectedItems, 1L)
-    val agg = new BloomFilterAggregate(
-      new XxHash64(Seq(GraftExpressionBridge.expression(value))),
-      Literal(n), Literal(bits)).toAggregateExpression()
-    val row = withScopedCaps(df.sparkSession, n, bits) {
-      df.select(GraftExpressionBridge.column(agg).as("bloom"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n")).head()
-    }
-    val bytes =
-      if (row.isNullAt(0)) toBytes(BloomFilter.create(n, bits))
-      else row.getAs[Array[Byte]](0)
-    (bytes, row.getLong(1))
-  }
-
-  /** Per-group distributed build: ONE `groupBy` aggregation job over
-    * `df` returning `group -> (serialized filter, key count)` — the
-    * sharded-sidecar builder (one Bloom filter per LSH band). All
-    * groups share one (`expectedItems`, `bits`) geometry: the
-    * aggregate's geometry is a plan literal, and identical geometry
-    * is what makes later per-group [[merge]]s legal. The count rides
-    * the same job (capacity bookkeeping needs it anyway). Groups are
-    * collected to the driver — group cardinality here is the band
-    * count (≤ dozens), never data-sized.
-    */
-  def buildPerGroup(df: DataFrame, group: Column, value: Column,
-      expectedItems: Long, bits: Long): Map[Int, (Array[Byte], Long)] = {
-    val n = math.max(expectedItems, 1L)
-    val agg = new BloomFilterAggregate(
-      new XxHash64(Seq(GraftExpressionBridge.expression(value))),
-      Literal(n), Literal(bits)).toAggregateExpression()
-    val rows = withScopedCaps(df.sparkSession, n, bits) {
-      df.groupBy(group.cast("int").as("g"))
-        .agg(GraftExpressionBridge.column(agg).as("bloom"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("cnt"))
-        .collect()
-    }
-    rows.map { r =>
-      val bytes =
-        if (r.isNullAt(1)) toBytes(BloomFilter.create(n, bits))
-        else r.getAs[Array[Byte]](1)
-      r.getInt(0) -> (bytes, r.getLong(2))
-    }.toMap
   }
 
   /** Membership probe as a codegen'd Catalyst predicate: true ⇒ the
@@ -201,14 +146,4 @@ object BloomGate {
     GraftExpressionBridge.column(BloomFilterMightContain(
       Literal(bloom),
       new XxHash64(Seq(GraftExpressionBridge.expression(value)))))
-
-  /** OR-merge two serialized filters of identical geometry — the
-    * append path for a persisted sidecar: the store's filter absorbs
-    * each ingested batch without ever rebuilding from the full store.
-    */
-  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = BloomFilter.readFrom(a)
-    fa.mergeInPlace(BloomFilter.readFrom(b))
-    toBytes(fa)
-  }
 }

@@ -1484,9 +1484,6 @@ object Dedup {
     graft.sources.PartitionedSink.writePartitioned(
       bandedMd5Sigs(baseDocs, numHashes, bands, sampleMod),
       tmp.toString, Seq("band"))
-    // Bloom sidecar rides inside the temp dir, so the rename publishes
-    // store + filter together (a store is never visible bloom-less)
-    writeStoreBloom(baseDocs.sparkSession, tmp.toString)
     StoreSwap.swapIn(fs, tmp, dst)
   }
 
@@ -1602,70 +1599,13 @@ object Dedup {
     // batch files carry a `b<tag>-` name prefix and a retry deletes
     // same-prefix leftovers before re-moving, so a crashed append
     // re-runs cleanly and a REPLAYED batch (marker present) is a
-    // no-op — never duplicated signature rows inflating probes. The
-    // bloom fold stays sidecar-FIRST (its crash asymmetry note below);
-    // a crashed-retry re-OR only inflates the items count — the
-    // false-positive direction, which the exact join clears.
+    // no-op — never duplicated signature rows inflating probes.
     val tagOpt = containmentBatchTag(deltaDocs)
     if (tagOpt.isEmpty) return // empty delta
     val tag = tagOpt.get
     val marker = new org.apache.hadoop.fs.Path(path, s"_applied/$tag")
     if (appendFs.exists(marker)) return // replayed batch
     val sigs = bandedMd5Sigs(deltaDocs, numHashes, bands, sampleMod)
-    // fold the batch's bucket keys into the Bloom sidecar BEFORE the
-    // parquet append: the sidecar and the band dirs can't move in one
-    // atomic step, and the two crash orderings are not symmetric — a
-    // sidecar carrying keys whose rows never landed yields only false
-    // POSITIVES (harmless: the exact join clears them), while band
-    // rows whose keys never reached the sidecar yield false NEGATIVES
-    // (the gate would silently drop real candidates). Sidecar-first
-    // keeps the no-false-negative invariant across any crash point.
-    // The merge itself is a delta-sized filter OR'd in at the
-    // sidecar's fixed geometry — no rebuild from the (large) base,
-    // cost ∝ batch. Capacity guard: once the running item count
-    // would exceed the sized capacity, the merged filter is past its
-    // design fpp (drifting toward all-positive — never wrong,
-    // eventually useless), so the sidecar is instead re-sized over
-    // store ∪ delta (still pre-append, same crash-safety) — one
-    // aggregation job, amortized over the ≥headroom× growth that
-    // triggered it. Pre-bloom stores stay sidecar-less here;
-    // ensureStoreBloom upgrades them lazily on first gated read.
-    val spark = deltaDocs.sparkSession
-    readStoreBloom(spark, path).foreach { sb =>
-      val deltaKeys = sigs
-        .select(col("band").cast("int").as("g"), col("bsig").as("k"))
-      // one fused groupBy(band) job: each band's delta filter (at the
-      // sidecar's shared geometry) AND the per-band key counts the
-      // capacity decision needs
-      val deltaPerBand = graft.functions.BloomGate.buildPerGroup(
-        deltaKeys, col("g"), col("k"), sb.expectedItems, sb.numBits)
-      val overCap = deltaPerBand.exists { case (b, (_, c)) =>
-        sb.items.getOrElse(b, 0L) + c > sb.expectedItems }
-      if (overCap) {
-        val all = readSignatureStore(spark, path)
-          .select(col("band").cast("int").as("g"), col("bsig").as("k"))
-          .unionAll(deltaKeys)
-        val counts = all.groupBy("g").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val (n, bits) = graft.functions.BloomGate.geometry(
-          spark, math.max(1L, counts.values.max) * 16L, 0.01)
-        val built = graft.functions.BloomGate.buildPerGroup(
-          all, col("g"), col("k"), n, bits)
-        publishStoreBloom(spark, path, StoreBloom(
-          built.map { case (b, (f, _)) => b -> f },
-          n, bits, built.map { case (b, (_, c)) => b -> c }))
-      } else {
-        // per-band OR-merge; a band new to the store adopts the delta
-        // shard as-is (same geometry by construction)
-        val shards = sb.shards ++ deltaPerBand.map { case (b, (f, _)) =>
-          b -> sb.shards.get(b)
-            .map(graft.functions.BloomGate.merge(_, f)).getOrElse(f) }
-        val items = sb.items ++ deltaPerBand.map { case (b, (_, c)) =>
-          b -> (sb.items.getOrElse(b, 0L) + c) }
-        publishStoreBloom(spark, path,
-          StoreBloom(shards, sb.expectedItems, sb.numBits, items))
-      }
-    }
     // sweep stale temp dirs from crashed appends of ANY batch
     for (st <- appendFs.listStatus(new org.apache.hadoop.fs.Path(path))
         if st.getPath.getName.startsWith(".appendtmp_"))
@@ -1717,92 +1657,8 @@ object Dedup {
     path
   }
 
-  // -------------------------------------------------------------------
-  // Bloom-filter gating for incremental ingest
-  // (see [[graft.functions.BloomGate]] for the why-at-100TB)
-  // -------------------------------------------------------------------
-
-  /** The store's Bloom-sidecar directory name. Underscore-prefixed, so
-    * Spark's parquet listing ignores it inside the store directory.
-    */
-  private val BloomSidecar = "_bloomgate"
-
-  /** Per-band shard probe: a row is suspect iff ITS band's filter
-    * may contain its `bsig`. The probe and the build MUST hash the
-    * same value (the bare `bsig` array — `XxHash64` hashes arrays
-    * canonically on both sides; the band is the SHARD key, not part
-    * of the hashed key). Compiles to an OR of band-guarded
-    * `might_contain` predicates — still a codegen'd map-side filter;
-    * a band with no shard (empty store slice) probes false, which is
-    * exact (no base bucket-mates can exist there).
-    */
-  private def shardProbe(shards: Map[Int, Array[Byte]]): Column =
-    if (shards.isEmpty) lit(false)
-    else shards.toSeq.sortBy(_._1).map { case (b, bytes) =>
-      (col("band") === lit(b)) &&
-        graft.functions.BloomGate.mightContain(bytes, col("bsig"))
-    }.reduce(_ || _)
-
-  /** Publish (or replace) the store's Bloom sidecar: ONE FILTER PER
-    * BAND over that band's `bsig` bucket keys (r9 — the single
-    * combined filter capped total capacity at [[graft.functions
-    * .BloomGate.MaxItems]]/`MaxBits`; sharding multiplies the ceiling
-    * by the band count, aligns the sidecar with how the band join
-    * partitions work, and each shard stays broadcastable). All shards
-    * share one geometry (`expectedItems`/`numBits` PER SHARD, sized
-    * from the LARGEST band) so later per-band merges are legal and
-    * the build is a single `groupBy(band)` job. `headroom` multiplies
-    * the per-band key count so the false-positive rate survives store
-    * growth by appends without a rebuild — at 16× headroom and 1% fpp
-    * the filter stays useful until the corpus has grown 16-fold, the
-    * point where a (cheap) rebuild re-sizes it. Atomic via temp +
-    * rename-swap, same discipline as compaction.
-    */
-  def writeStoreBloom(spark: org.apache.spark.sql.SparkSession,
-      path: String, headroom: Long = 16L, fpp: Double = 0.01): Unit = {
-    val keys = readSignatureStore(spark, path)
-      .select(col("band").cast("int").as("g"), col("bsig").as("k"))
-    val counts = keys.groupBy("g").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxBand = if (counts.isEmpty) 1L else counts.values.max
-    val (n, bits) = graft.functions.BloomGate.geometry(
-      spark, maxBand * headroom, fpp)
-    val built =
-      if (counts.isEmpty) Map.empty[Int, (Array[Byte], Long)]
-      else graft.functions.BloomGate.buildPerGroup(
-        keys, col("g"), col("k"), n, bits)
-    publishStoreBloom(spark, path, StoreBloom(
-      built.map { case (b, (f, _)) => b -> f },
-      n, bits, built.map { case (b, (_, c)) => b -> c }))
-  }
-
-  /** Atomic sidecar publish (temp dir + rename-swap). Layout:
-    * `meta` = line `v2 <expectedItems> <numBits>` followed by one
-    * `<band> <items>` line per shard; `filter_<band>.bin` per shard.
-    */
-  private def publishStoreBloom(spark: org.apache.spark.sql.SparkSession,
-      path: String, sb: StoreBloom): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path, BloomSidecar)
-    val tmp = new org.apache.hadoop.fs.Path(path, BloomSidecar + ".inprogress")
-    fs.delete(tmp, true)
-    fs.mkdirs(tmp)
-    for ((b, bytes) <- sb.shards)
-      writeSmallFile(fs,
-        new org.apache.hadoop.fs.Path(tmp, s"filter_$b.bin"), bytes)
-    val meta = (s"v2 ${sb.expectedItems} ${sb.numBits}" +:
-      sb.items.toSeq.sortBy(_._1).map { case (b, c) => s"$b $c" })
-      .mkString("\n")
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, "meta"),
-      meta.getBytes("UTF-8"))
-    val old = new org.apache.hadoop.fs.Path(path, BloomSidecar + ".old")
-    fs.delete(old, true)
-    if (fs.exists(dir)) require(fs.rename(dir, old), s"bloom swap-out failed: $dir")
-    require(fs.rename(tmp, dir), s"bloom publish failed: $dir")
-    fs.delete(old, true)
-  }
-
+  /** Store marker and meta files (`_SUCCESS`, `_applied/<tag>`,
+    * `_meta_*`): a few bytes each, written and read whole. */
   private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
     val out = fs.create(p, true)
@@ -1812,125 +1668,7 @@ object Dedup {
   private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Array[Byte] = {
     val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      bos.toByteArray
-    } finally in.close()
-  }
-
-  /** A store's Bloom sidecar, sharded one filter per band: the
-    * serialized shards, the SHARED per-shard geometry
-    * (`expectedItems`/`numBits` — later merges must reuse it), and
-    * the running per-band key counts (the append path's capacity
-    * bookkeeping: once any band's items exceed `expectedItems`, that
-    * shard is past its design fpp and the sidecar gets re-sized).
-    */
-  final case class StoreBloom(shards: Map[Int, Array[Byte]],
-      expectedItems: Long, numBits: Long, items: Map[Int, Long]) {
-    def totalItems: Long = items.values.sum
-  }
-
-  /** Read the store's Bloom sidecar, or None for a store without one.
-    * Pre-sharding sidecars (metas not starting `v2`) read as None —
-    * the lazy-upgrade path ([[ensureStoreBloom]]) then rebuilds them
-    * onto the sharded format from the store's current contents.
-    */
-  def readStoreBloom(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[StoreBloom] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path, BloomSidecar)
-    val meta = new org.apache.hadoop.fs.Path(dir, "meta")
-    if (!fs.exists(meta)) None
-    else {
-      val lines = new String(readSmallFile(fs, meta), "UTF-8")
-        .trim.split('\n').map(_.trim).filter(_.nonEmpty)
-      val head = lines.head.split(' ')
-      if (head(0) != "v2") None
-      else {
-        val items = lines.tail.map { l =>
-          val p = l.split(' '); p(0).toInt -> p(1).toLong
-        }.toMap
-        val shards = items.keys.map { b =>
-          b -> readSmallFile(fs,
-            new org.apache.hadoop.fs.Path(dir, s"filter_$b.bin"))
-        }.toMap
-        Some(StoreBloom(shards, head(1).toLong, head(2).toLong, items))
-      }
-    }
-  }
-
-  /** Publication stamp of the store's Bloom sidecar (mtime ⊕ length
-    * of its meta file; −1 if absent) — the cheap staleness probe a
-    * long-running consumer (the streaming gate) checks per
-    * micro-batch: one `getFileStatus` call, re-resolving the filter
-    * only when the stamp moves. Watching the SIDECAR (not the store's
-    * `_SUCCESS`) matters: [[appendToSignatureStore]] publishes
-    * sidecar-before-parquet, so a filter picked up at any stamp is a
-    * superset of every base row the band join can see at that moment
-    * — the no-false-negative invariant holds across concurrent
-    * appends.
-    */
-  def storeBloomStamp(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path, BloomSidecar), "meta")
-    if (!fs.exists(meta)) -1L
-    else {
-      val st = fs.getFileStatus(meta)
-      st.getModificationTime ^ (st.getLen << 48)
-    }
-  }
-
-  /** Sidecar-or-build: reuse a present sidecar, else publish one from
-    * the store's current contents (one aggregation job) — the lazy
-    * upgrade path for stores written before blooms existed.
-    */
-  def ensureStoreBloom(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[Int, Array[Byte]] =
-    readStoreBloom(spark, path) match {
-      case Some(sb) => sb.shards
-      case None =>
-        writeStoreBloom(spark, path)
-        readStoreBloom(spark, path).get.shards
-    }
-
-  /** [[incrementalLshStore]] with the store's Bloom sidecar gating the
-    * delta's banded rows BEFORE the band join: a delta bucket key the
-    * filter rejects provably has no base bucket-mates (no false
-    * negatives), so the row can't contribute a candidate pair and is
-    * dropped map-side by a codegen'd predicate — the join's shuffle
-    * shrinks to true collisions + the fpp stragglers. Verdict rows are
-    * still emitted for EVERY sampled delta doc (the gate prunes join
-    * inputs, not report rows), so the output is bit-identical to the
-    * ungated path and [[incrementalLshMd5Sql]] remains its oracle. At
-    * 100 TB this is the difference between shuffling every new batch's
-    * full band set against the store and shuffling only the (rare)
-    * suspected-duplicate slice.
-    */
-  def incrementalLshStoreBloom(storePath: String, delta: DataFrame,
-      numHashes: Int = 16, bands: Int = 4, minEstSim: Double = 0.5,
-      sampleMod: Int = 2, bucketCap: Int = DefaultBucketCap,
-      presetBloom: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
-    val spark = delta.sparkSession
-    // presetBloom: callers probing the same store repeatedly (the
-    // streaming gate's per-micro-batch loop) resolve the sidecar once
-    // and pass it in, skipping the per-call sidecar read
-    val bloom = presetBloom.getOrElse(ensureStoreBloom(spark, storePath))
-    val base = readSignatureStore(spark, storePath)
-      .select("doc_id", "sig", "band", "bsig")
-    // per-band shard probe (no coalesce guard: the probe never
-    // returns null — XxHash64 folds a null key into the seed)
-    val gated = bandedMd5Sigs(delta, numHashes, bands, sampleMod)
-      .filter(shardProbe(bloom))
-    incrementalReportSplit(gated, base, "bsig",
-      delta.filter(pmod(col("doc_id"), lit(sampleMod)) === 0),
-      numHashes, minEstSim, bucketCap)
+    try in.readAllBytes() finally in.close()
   }
 
   /** Bloom-gated EXACT incremental dedup — the fingerprint-level
@@ -1950,9 +1688,7 @@ object Dedup {
     * NOTE: constructing this frame RUNS two jobs (base count + the
     * distributed bloom build) — like the CC entries, and unlike the
     * lazy Lloyd/BPE loops — because the filter must exist before the
-    * probe plan can be built. A production ingest pipeline amortizes
-    * both: the bloom is a persisted artifact maintained with the base
-    * (the [[writeStoreBloom]] sidecar pattern), not rebuilt per batch.
+    * probe plan can be built.
     */
   def incrementalExactBloom(docs: DataFrame, deltaMod: Int = 3,
       fpp: Double = 0.01): DataFrame = {

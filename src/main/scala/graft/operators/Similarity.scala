@@ -1105,9 +1105,8 @@ object Similarity {
     val spark = asg.sparkSession
     // the batch's TOUCHED CELLS are known once the (already eager)
     // assignment materializes — a ≤`cells`-row collect (dictionary-
-    // sized, the BloomGate-sidecar class of driver artifact, not a
-    // data collect) pushed back as a literal IN-filter on the
-    // hive-partition column, so the scan below reads ONLY the store
+    // sized driver artifact, not a data collect) pushed back as a
+    // literal IN-filter on the hive-partition column, so the scan below reads ONLY the store
     // partitions this batch can match. Spark's automatic DPP declines
     // this join (no selective build-side predicate), so the operator
     // supplies the pruning itself; `pruneCells = false` restores the

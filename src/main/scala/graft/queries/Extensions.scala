@@ -566,16 +566,6 @@ object Extensions {
         new java.io.File(c.dir).getName + "_incstore")
       Dedup.incrementalLshStore(store, delta)
     }),
-    // same store, probed through its Bloom sidecar: delta band rows
-    // the filter rejects skip the band join entirely (no false
-    // negatives ⇒ bit-identical verdicts, same oracle)
-    "dedup_incremental_store_bloom" -> (c => {
-      val base = c.documents.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val delta = c.documents.filter(pmod(col("doc_id"), lit(3)) === 0)
-      val store = Dedup.ensureSignatureStore(base,
-        new java.io.File(c.dir).getName + "_incstore")
-      Dedup.incrementalLshStoreBloom(store, delta)
-    }),
     // exact-fingerprint ingest gate: bloom routes, broadcast semi-join
     // verifies — base never shuffles
     "dedup_incremental_bloom" -> (c => Dedup.incrementalExactBloom(c.documents)),
@@ -967,7 +957,6 @@ object Extensions {
     // round-trip must be invisible in the verdicts
     "dedup_incremental_store" -> Dedup.incrementalLshMd5Sql(),
     // bloom gating prunes join INPUTS, never verdicts — same oracle
-    "dedup_incremental_store_bloom" -> Dedup.incrementalLshMd5Sql(),
     "dedup_incremental_bloom" -> Dedup.incrementalExactBloomSql(),
     "dedup_passages" -> Dedup.passageDedupSql(),
     "dedup_spans" -> Dedup.spanDedupSql(),

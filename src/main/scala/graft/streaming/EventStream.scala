@@ -503,9 +503,8 @@ object EventStream {
     * multi-stage batch aggregation, so it runs per micro-batch via
     * `foreachBatch` (the standard shape for compound batch logic on a
     * stream); the store MAY grow by concurrent appends mid-run — each
-    * batch re-reads the store parquet, and the Bloom sidecar is
-    * stamp-watched per batch (see inline note) so the gate never goes
-    * stale against it. Verdicts depend only on the
+    * batch re-reads the store parquet, so a batch sees every append
+    * published before it starts. Verdicts depend only on the
     * doc's own signatures vs the store (no delta-delta interaction),
     * so output is independent of micro-batch boundaries; per-batch
     * cost is O(batch · bands) + bucket probes, independent of base
@@ -523,33 +522,8 @@ object EventStream {
     */
   def incrementalDedupStream(docs: DataFrame, storePath: String,
       outDir: String, checkpointDir: String,
-      sampleMod: Int = 1, useBloom: Boolean = false,
+      sampleMod: Int = 1,
       onBatchStart: Long => Unit = _ => ()): StreamingQuery = {
-    // the sidecar is resolved lazily and CACHED BY PUBLICATION STAMP:
-    // one getFileStatus per micro-batch re-reads the filter only when
-    // the sidecar on disk has changed. This closes the r8 staleness
-    // hazard — a store appended by ANOTHER writer mid-stream grows
-    // base rows the old snapshot filter doesn't know, and a bloom
-    // miss routes AROUND the exact probe (false negatives = wrong
-    // verdicts, not just lost selectivity). appendToSignatureStore
-    // publishes sidecar-before-parquet, so the stamp-watched filter
-    // is always a superset of the base rows each batch's band join
-    // can see. Verdicts therefore stay exact across mid-stream
-    // appends; within a stable store the cost is one file-status
-    // call per trigger.
-    val sess = docs.sparkSession
-    var cachedStamp = Long.MinValue
-    var cachedBloom: Map[Int, Array[Byte]] = null
-    def currentBloom(): Map[Int, Array[Byte]] = {
-      val stamp = graft.operators.Dedup.storeBloomStamp(sess, storePath)
-      if (stamp != cachedStamp || cachedBloom == null) {
-        cachedBloom = graft.operators.Dedup.ensureStoreBloom(sess, storePath)
-        // ensureStoreBloom may have just PUBLISHED the sidecar (lazy
-        // upgrade of a pre-bloom store) — stamp it after resolution
-        cachedStamp = graft.operators.Dedup.storeBloomStamp(sess, storePath)
-      }
-      cachedBloom
-    }
     val q = docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -557,16 +531,12 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         // driver-side per-batch hook (default no-op): lets tests and
         // operators interpose between micro-batches — the staleness
-        // spec appends to the store here to prove the stamp-watched
-        // gate picks the grown filter up mid-run
+        // spec appends to the store here to prove a later batch probes
+        // the grown store
         onBatchStart(batchId)
-        val verdicts =
-          if (useBloom) graft.operators.Dedup.incrementalLshStoreBloom(
-            storePath, batch.toDF(), sampleMod = sampleMod,
-            presetBloom = Some(currentBloom()))
-          else graft.operators.Dedup.incrementalLshStore(
-            storePath, batch.toDF(), sampleMod = sampleMod)
-        verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        graft.operators.Dedup.incrementalLshStore(
+          storePath, batch.toDF(), sampleMod = sampleMod)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .start()
     q.processAllAvailable()

@@ -484,6 +484,39 @@ class DedupSpec extends AnyFunSuite {
     val viaFresh = Dedup.incrementalLshStore(fresh, delta, sampleMod = 1)
       .collect().map(_.toString)
     assert(viaGrown.sameElements(viaFresh) && viaGrown.nonEmpty)
+    // a store written while the signature store kept a Bloom sidecar
+    // still holds `_bloomgate/` (a `meta` file plus one filter per
+    // band): read, append, compaction and probe must treat it as the
+    // same store as one without the directory
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val legacy = tmp.resolve("legacy").toString
+    Dedup.writeSignatureStore(b0, legacy, sampleMod = 1)
+    val sidecar = new org.apache.hadoop.fs.Path(legacy, "_bloomgate")
+    def put(name: String, bytes: Array[Byte]): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(sidecar, name))
+      try out.write(bytes) finally out.close()
+    }
+    put("meta", "v2 16 192\n0 1\n1 1\n2 1\n3 1".getBytes("UTF-8"))
+    for (b <- 0 until 4) put(s"filter_$b.bin", Array.fill[Byte](40)(0))
+    def rows(p: String): Array[String] = Dedup.readSignatureStore(spark, p)
+      .collect().map(_.toString).sorted
+    def verdicts(p: String): Array[String] =
+      Dedup.incrementalLshStore(p, delta, sampleMod = 1)
+        .collect().map(_.toString)
+    val plain = tmp.resolve("plain").toString
+    Dedup.writeSignatureStore(b0, plain, sampleMod = 1)
+    assert(rows(legacy).sameElements(rows(plain)))
+    Dedup.appendToSignatureStore(b1, legacy, sampleMod = 1)
+    assert(rows(legacy).sameElements(rows(grown)))
+    assert(verdicts(legacy).sameElements(viaGrown))
+    val compacted = Dedup.compactSignatureStore(spark, legacy,
+      maxFilesPerBand = 1)
+    assert(compacted > 0 &&
+      compacted == Dedup.compactSignatureStore(spark, grown, maxFilesPerBand = 1))
+    assert(rows(legacy).sameElements(rows(grown)))
+    assert(verdicts(legacy).sameElements(viaGrown))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(sidecar, "meta")))
   }
 
   test("compaction rewrites many-file bands without changing verdicts") {
@@ -770,36 +803,6 @@ class DedupSpec extends AnyFunSuite {
     assert(leaked < 50L, s"fpp blew past its bound: $leaked/1000")
   }
 
-  test("bloom sidecar merges across appends and gates the store path") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    val b0 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
-    val b1 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
-    val delta = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("sigstore_bloom")
-    val grown = tmp.resolve("grown").toString
-    Dedup.writeSignatureStore(b0, grown, sampleMod = 1)
-    assert(Dedup.readStoreBloom(spark, grown).nonEmpty,
-      "writeSignatureStore published no bloom sidecar")
-    Dedup.appendToSignatureStore(b1, grown, sampleMod = 1)
-    // gated store probe == ungated == the one-frame twin
-    val gated = Dedup.incrementalLshStoreBloom(grown, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    val ungated = Dedup.incrementalLshStore(grown, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    assert(gated.sameElements(ungated) && gated.nonEmpty,
-      "bloom gating changed store verdicts")
-    // a pre-bloom store (sidecar removed) upgrades lazily and agrees
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(grown, "_bloomgate"), true)
-    assert(Dedup.readStoreBloom(spark, grown).isEmpty)
-    val upgraded = Dedup.incrementalLshStoreBloom(grown, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    assert(upgraded.sameElements(ungated))
-    assert(Dedup.readStoreBloom(spark, grown).nonEmpty,
-      "lazy sidecar upgrade did not persist")
-  }
-
   test("bloom exact gate on an empty base marks every delta doc new") {
     // deltaMod=1 → every doc is delta, the base slice is empty: the
     // empty-input build must yield a valid all-negative filter (not
@@ -813,12 +816,17 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.functions.BloomGate
     import org.apache.spark.sql.functions.col
-    // a 100 TB store's sidecar needs more than the 4M-item / 67M-bit
-    // runtime-filter defaults; geometry clamps only at BloomGate's own
-    // 1e9/1GiB ceilings, so a 10M-key geometry comes back unclamped...
-    val (n, bits) = BloomGate.geometry(spark, 10000000L, 0.01)
+    // a web-scale base corpus's fingerprint gate needs more than the
+    // 4M-item / 67M-bit runtime-filter defaults; geometry clamps only
+    // at BloomGate's own 1e9/1GiB ceilings, so a 10M-key geometry
+    // comes back unclamped...
+    val (n, bits) = BloomGate.geometry(10000000L, 0.01)
     assert(n == 10000000L, s"items clamped to $n")
     assert(bits == BloomGate.numBits(10000000L, 0.01), s"bits clamped to $bits")
+    // ...while a request past those ceilings clamps to them
+    val (nBig, bitsBig) = BloomGate.geometry(5000000000L, 0.01)
+    assert(nBig == BloomGate.MaxItems)
+    assert(bitsBig == BloomGate.MaxBits)
     // ...and a build at 5M-item geometry (past the default cap) goes
     // through BloomFilterAggregate by raising the session caps SCOPED
     // to the build job — the session's caps for the planner's own
@@ -833,66 +841,6 @@ class DedupSpec extends AnyFunSuite {
       "scoped cap raise leaked into the session")
     assert(before._1.toLong <= 4000000L,
       s"session cap is not the small default: ${before._1}")
-  }
-
-  test("bloom sidecar shards per band with per-band geometry") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    import graft.functions.BloomGate
-    val base = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-    val delta = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("sigstore_shard")
-    val store = tmp.resolve("store").toString
-    Dedup.writeSignatureStore(base, store, sampleMod = 1)
-    val sb = Dedup.readStoreBloom(spark, store).get
-    // one shard per band (16×4 default), one bucket key per doc per
-    // band — the shard key is the band, the hashed key the bare bsig
-    assert(sb.shards.keySet == Set(0, 1, 2, 3), sb.shards.keySet)
-    val nDocs = base.count()
-    assert(sb.items.values.forall(_ == nDocs), sb.items.toString)
-    // geometry sized from the largest BAND, not the bands×-larger
-    // total: per-shard capacity × band count is how the sidecar
-    // scales PAST the 1e9-key/1GiB single-filter ceiling...
-    assert(sb.expectedItems == nDocs * 16L, sb.expectedItems.toString)
-    // ...at which a monolithic request clamps (the ceiling the shards
-    // break through)
-    val (nBig, bitsBig) = BloomGate.geometry(spark, 5000000000L, 0.01)
-    assert(nBig == BloomGate.MaxItems)
-    assert(bitsBig == BloomGate.MaxBits)
-    // and the gated path over the sharded sidecar stays ≡ ungated
-    val gated = Dedup.incrementalLshStoreBloom(store, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    val ungated = Dedup.incrementalLshStore(store, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    assert(gated.sameElements(ungated) && gated.nonEmpty)
-  }
-
-  test("bloom sidecar re-sizes when appends exceed its capacity") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    val b0 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
-    val b1 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
-    val delta = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("sigstore_cap")
-    val store = tmp.resolve("store").toString
-    Dedup.writeSignatureStore(b0, store, sampleMod = 1)
-    // shrink the sidecar's headroom to exactly the current keys, so
-    // the next append must blow past capacity
-    Dedup.writeStoreBloom(spark, store, headroom = 1L)
-    val before = Dedup.readStoreBloom(spark, store).get
-    // headroom=1 sizes the shared shard geometry to the LARGEST band
-    assert(before.items.values.max == before.expectedItems)
-    Dedup.appendToSignatureStore(b1, store, sampleMod = 1)
-    val after = Dedup.readStoreBloom(spark, store).get
-    // past-capacity append re-sized from the full store (default
-    // headroom), instead of silently merging toward all-positive
-    assert(after.expectedItems > before.expectedItems,
-      s"sidecar not re-sized: ${before.expectedItems} -> ${after.expectedItems}")
-    assert(after.totalItems > before.totalItems)
-    // and the gate still agrees with the ungated path
-    val gated = Dedup.incrementalLshStoreBloom(store, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    val ungated = Dedup.incrementalLshStore(store, delta, sampleMod = 1)
-      .collect().map(_.toString)
-    assert(gated.sameElements(ungated) && gated.nonEmpty)
   }
 
   test("lshEval scores LSH candidates against exact-Jaccard truth") {

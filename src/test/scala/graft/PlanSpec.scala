@@ -225,19 +225,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("bloom-gated store probe: gate precedes the band join, no SMJ") {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val base = ctx.documents.filter(pmod(col("doc_id"), lit(3L)) =!= 0)
-    val store = graft.operators.Dedup.ensureSignatureStore(
-      base, "plan_spec_bloom_store")
-    val p = planOf(graft.operators.Dedup.incrementalLshStoreBloom(
-      store, ctx.documents.filter(pmod(col("doc_id"), lit(3L)) === 0)))
-    assert(p.contains("might_contain"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("Scan parquet"), p)
-  }
-
   test("cluster resolution: no window on cluster_id/group_id — aggregates only") {
     // a row_number/count window partitioned on the cluster label sends
     // every member of a component to ONE reducer task (a web corpus's

@@ -115,20 +115,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed.sameElements(batch))
       assert(streamed.nonEmpty)
     } finally q.stop()
-    // the bloom-gated variant (sidecar resolved once, probed per
-    // micro-batch) must land the SAME verdicts
-    val outBloom = tmp.resolve("out_bloom").toString
-    val qb = EventStream.incrementalDedupStream(
-      EventStream.readDocuments(spark, deltaDir), store, outBloom,
-      tmp.resolve("ckpt_bloom").toString, useBloom = true)
-    try {
-      val gated = spark.read.parquet(outBloom).drop("batch")
-        .collect().map(_.toString).sorted
-      val plain = spark.read.parquet(outDir).drop("batch")
-        .collect().map(_.toString).sorted
-      assert(gated.sameElements(plain) && gated.nonEmpty,
-        "bloom-gated streaming verdicts diverged")
-    } finally qb.stop()
   }
 
   test("streaming semantic dedup matches the store-fed batch path") {
@@ -578,16 +564,15 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("mid-stream store appends reach the bloom gate (stamp re-resolution)") {
+  test("mid-stream store appends reach later micro-batches (per-batch store re-read)") {
     import graft.operators.Dedup
     val docs = Ctx(spark, sfDir).documents
     val base = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val delta = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     // appended mid-stream: a copy of EVERY delta doc under shifted ids
     // — whichever docs the file source routes to the later batches,
-    // they are guaranteed dups against the grown store, so a stale
-    // snapshot filter (bloom miss routes AROUND the exact probe)
-    // would produce wrong verdicts, not just lost selectivity
+    // they are guaranteed dups against the grown store, so a batch
+    // probing a stale snapshot of the store would rule differently
     val grown = delta.select((col("doc_id") + 1000000L).as("doc_id"),
       col("text"), col("lang"), col("source"), col("n_chars"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_stale_stream")
@@ -595,36 +580,41 @@ class StreamingSpec extends AnyFunSuite {
     // 3 files + maxFilesPerTrigger=1 → batches 0,1,2; the append
     // lands at the START of batch 1, so batches 1–2 must see it
     delta.repartition(3).write.parquet(deltaDir)
-    def runStream(tag: String, useBloom: Boolean,
-        appendAt: Option[Long]): Array[String] = {
+    def runStream(tag: String, appendAt: Option[Long]): (String, String) = {
       val store = tmp.resolve(s"store_$tag").toString
       Dedup.writeSignatureStore(base, store, sampleMod = 1)
-      val stamp0 = Dedup.storeBloomStamp(spark, store)
       val out = tmp.resolve(s"out_$tag").toString
       val q = EventStream.incrementalDedupStream(
         EventStream.readDocuments(spark, deltaDir,
           maxFilesPerTrigger = Some(1)),
         store, out, tmp.resolve(s"ckpt_$tag").toString,
-        useBloom = useBloom,
         onBatchStart = bid => if (appendAt.contains(bid))
           Dedup.appendToSignatureStore(grown, store, sampleMod = 1))
-      try {
-        if (appendAt.nonEmpty)
-          assert(Dedup.storeBloomStamp(spark, store) != stamp0,
-            "append did not move the sidecar stamp")
-        spark.read.parquet(out).drop("batch")
-          .collect().map(_.toString).sorted
-      } finally q.stop()
+      q.stop()
+      (store, out)
     }
-    val gatedGrown = runStream("bloom_app", useBloom = true, Some(1L))
-    val plainGrown = runStream("plain_app", useBloom = false, Some(1L))
-    assert(gatedGrown.sameElements(plainGrown) && gatedGrown.nonEmpty,
-      "bloom gate went stale against a mid-stream store append")
-    // sanity that the scenario has teeth: the same gated stream over a
-    // store that is NOT appended must rule differently on the later
-    // batches (otherwise the append never influenced any verdict)
-    val gatedStatic = runStream("bloom_static", useBloom = true, None)
-    assert(!gatedStatic.sameElements(gatedGrown),
+    def verdicts(out: String, later: Boolean): Array[String] =
+      spark.read.parquet(out)
+        .filter(if (later) col("batch") >= 1 else col("batch") === 0)
+        .drop("batch").collect().map(_.toString).sorted
+    val (grownStore, grownOut) = runStream("app", Some(1L))
+    val (_, staticOut) = runStream("static", None)
+    // batch 0 ran before the append: the unappended store's verdicts
+    assert(verdicts(grownOut, later = false)
+      .sameElements(verdicts(staticOut, later = false)))
+    // batches 1–2 ran after it: the batch path over the grown store,
+    // row for row
+    val laterDocs = delta.join(spark.read.parquet(grownOut)
+      .filter(col("batch") >= 1).select("doc_id"), Seq("doc_id"), "left_semi")
+    val expected = Dedup.incrementalLshStore(grownStore, laterDocs,
+      sampleMod = 1).collect().map(_.toString).sorted
+    assert(verdicts(grownOut, later = true).sameElements(expected) &&
+      expected.nonEmpty, "a micro-batch probed a stale store")
+    // sanity that the scenario has teeth: the same stream over a store
+    // that is NOT appended must rule differently on the later batches
+    // (otherwise the append never influenced any verdict)
+    assert(!verdicts(staticOut, later = true)
+      .sameElements(verdicts(grownOut, later = true)),
       "append never influenced later batches — scenario is vacuous")
   }
 
