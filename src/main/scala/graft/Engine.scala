@@ -61,13 +61,6 @@ object Engine {
       // runtime row-level join pruning: bloom filters built from the
       // selective side prune the probe-side scan (a big win for the
       // dimension-filtered fact joins at 100 TB)
-      // NOTE: the runtime-filter size caps stay at their defaults
-      // (4M items / 67M bits) — deliberately small for the planner's
-      // auto-injected filters. The explicit BloomGate fingerprint gate
-      // sizes its filter to the base corpus (up to 1e9 keys / 1 GiB)
-      // and raises the caps SCOPED to its own build job
-      // (BloomGate.withScopedCaps), so a misestimated plan can never
-      // materialize a gigabyte-scale injected filter session-wide.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // the events fixture carries TIMESTAMP(NANOS) parquet, which

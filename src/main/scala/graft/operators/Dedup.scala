@@ -1671,63 +1671,36 @@ object Dedup {
     try in.readAllBytes() finally in.close()
   }
 
-  /** Bloom-gated EXACT incremental dedup — the fingerprint-level
-    * ingest gate: new docs (`doc_id % deltaMod == 0`) are checked for
-    * exact (normalized-md5, [[fingerprint]]) duplication against the
-    * base corpus. A Bloom filter over the base's fingerprints routes
-    * the docs: bloom-negative ⇒ DEFINITELY new, no join at all;
-    * bloom-positive (true dups + ~fpp stragglers) ⇒ exact
-    * verification, where the tiny positive set is BROADCAST against
-    * the base scan (semi-join) so the base is scanned once and never
-    * shuffled. Output per delta doc: `first_seen` (min base doc_id
-    * with the same fingerprint, −1 if new) and `is_dup` — EXACT
-    * regardless of fpp, which only moves work between the two routes
-    * (spec-checked at fpp=0.5). Oracle: [[incrementalExactBloomSql]]
-    * (a plain left join — the bloom must be invisible in the result).
-    *
-    * NOTE: constructing this frame RUNS two jobs (base count + the
-    * distributed bloom build) — like the CC entries, and unlike the
-    * lazy Lloyd/BPE loops — because the filter must exist before the
-    * probe plan can be built.
+  /** EXACT incremental dedup — the fingerprint-level ingest gate: new
+    * docs (`doc_id % deltaMod == 0`) are checked for exact
+    * (normalized-md5, [[fingerprint]]) duplication against the base
+    * corpus. The delta's distinct fingerprints are BROADCAST into a
+    * semi-join over the base, so the base is scanned once and never
+    * shuffled; the matching base rows' min doc_id per fingerprint is
+    * broadcast back onto the delta. Output per delta doc: `first_seen`
+    * (min base doc_id with the same fingerprint, −1 if new) and
+    * `is_dup`. A NULL fingerprint (NULL text) never matches. Lazy: no
+    * job runs until an action. Oracle: [[incrementalExactSql]].
     */
-  def incrementalExactBloom(docs: DataFrame, deltaMod: Int = 3,
-      fpp: Double = 0.01): DataFrame = {
+  def incrementalExact(docs: DataFrame, deltaMod: Int = 3): DataFrame = {
     val withFp = docs.select(col("doc_id"),
       TextFunctions.fingerprint(col("text")).as("fp"))
     val isDelta = pmod(col("doc_id"), lit(deltaMod)) === 0
-    val base = withFp.filter(!isDelta)
     val delta = withFp.filter(isDelta)
-    // expectedItems: one column-pruned count of the base slice (the
-    // md5 never evaluates — Catalyst prunes it under count)
-    val nBase = docs.filter(!isDelta).count()
-    val bloom = graft.functions.BloomGate.build(
-      base.select(col("fp")), col("fp"), math.max(nBase, 1L), fpp)
-    // no coalesce guard: the probe never returns null (XxHash64 folds
-    // a null key into the seed — see BloomGate.mightContain)
-    val gated = delta.withColumn("maybe_seen",
-      graft.functions.BloomGate.mightContain(bloom, col("fp")))
-    val positives = gated.filter(col("maybe_seen"))
-    // base side: scanned once, shuffled never — the suspected set is
-    // broadcast both into the semi-join and onto its own verdict join
-    val firstSeen = base
-      .join(broadcast(positives.select("fp").distinct()), Seq("fp"), "left_semi")
+    val firstSeen = withFp.filter(!isDelta)
+      .join(broadcast(delta.select("fp").distinct()), Seq("fp"), "left_semi")
       .groupBy("fp").agg(min("doc_id").as("first_seen"))
-    positives
+    delta
       .join(broadcast(firstSeen), Seq("fp"), "left")
       .select(col("doc_id"),
         coalesce(col("first_seen"), lit(-1L)).as("first_seen"),
         when(col("first_seen").isNotNull, lit(1L)).otherwise(lit(0L))
           .as("is_dup"))
-      .unionAll(gated.filter(!col("maybe_seen"))
-        .select(col("doc_id"), lit(-1L).as("first_seen"),
-          lit(0L).as("is_dup")))
       .orderBy("doc_id")
   }
 
-  /** DuckDB oracle for [[incrementalExactBloom]] — bloom-free by
-    * construction: routing may never change the answer.
-    */
-  def incrementalExactBloomSql(deltaMod: Int = 3): String =
+  /** DuckDB oracle for [[incrementalExact]]: a plain left join. */
+  def incrementalExactSql(deltaMod: Int = 3): String =
     s"""WITH fp AS (
        |  SELECT doc_id,
        |    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp

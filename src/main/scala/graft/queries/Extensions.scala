@@ -566,9 +566,9 @@ object Extensions {
         new java.io.File(c.dir).getName + "_incstore")
       Dedup.incrementalLshStore(store, delta)
     }),
-    // exact-fingerprint ingest gate: bloom routes, broadcast semi-join
-    // verifies — base never shuffles
-    "dedup_incremental_bloom" -> (c => Dedup.incrementalExactBloom(c.documents)),
+    // exact-fingerprint ingest gate: broadcast semi-join, base never
+    // shuffles
+    "dedup_incremental_exact" -> (c => Dedup.incrementalExact(c.documents)),
     "dedup_passages" -> (c => Dedup.passageDedup(c.documents)),
     "dedup_spans" -> (c => Dedup.spanDedup(c.documents)),
     // true Lee et al. exact-substring dedup: distributed suffix
@@ -956,8 +956,7 @@ object Extensions {
     // same oracle as the one-frame twin: base/delta split + parquet
     // round-trip must be invisible in the verdicts
     "dedup_incremental_store" -> Dedup.incrementalLshMd5Sql(),
-    // bloom gating prunes join INPUTS, never verdicts — same oracle
-    "dedup_incremental_bloom" -> Dedup.incrementalExactBloomSql(),
+    "dedup_incremental_exact" -> Dedup.incrementalExactSql(),
     "dedup_passages" -> Dedup.passageDedupSql(),
     "dedup_spans" -> Dedup.spanDedupSql(),
     // independent-algorithm oracle: literal substring multiplicity

@@ -164,7 +164,7 @@ object TrainingExport {
     * whole export is never re-read).
     *
     * CONTRACT: the batch must be disjoint from the export (the
-    * upstream dedup gate's job — e.g. `Dedup.incrementalExactBloom`);
+    * upstream dedup gate's job — e.g. `Dedup.incrementalExact`);
     * a doc_id already exported would land twice, and the manifest
     * would faithfully COUNT it twice (the audit reveals, not
     * prevents, upstream double-sends).

@@ -753,94 +753,111 @@ class DedupSpec extends AnyFunSuite {
     java.security.MessageDigest.getInstance("MD5").digest(
       s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  test("bloom-gated exact incremental matches the plain left join at any fpp") {
+  /** The exact gate's reference: a plain left join of the delta's
+    * fingerprints onto the base's min doc_id per fingerprint, rendered
+    * row by row.
+    */
+  private def exactReference(d: org.apache.spark.sql.DataFrame,
+      deltaMod: Int): Array[String] = {
     import org.apache.spark.sql.functions.{col, pmod, lit, min => fmin}
     import graft.functions.TextFunctions
-    def reference(deltaMod: Int): Array[String] = {
-      val fp = docs.select(col("doc_id"),
-        TextFunctions.fingerprint(col("text")).as("fp"))
-      val base = fp.filter(pmod(col("doc_id"), lit(deltaMod)) =!= 0)
-        .groupBy("fp").agg(fmin("doc_id").as("first_seen"))
-      fp.filter(pmod(col("doc_id"), lit(deltaMod)) === 0)
-        .join(base, Seq("fp"), "left")
-        .select(col("doc_id"),
-          org.apache.spark.sql.functions.coalesce(col("first_seen"), lit(-1L))
-            .as("first_seen"),
-          org.apache.spark.sql.functions
-            .when(col("first_seen").isNotNull, lit(1L)).otherwise(lit(0L))
-            .as("is_dup"))
-        .orderBy("doc_id").collect().map(_.toString)
-    }
-    // tight and sloppy fpp must agree bit-for-bit with the bloom-free
-    // join: the filter routes rows, it never decides verdicts (a high
-    // fpp only pushes more definitely-new docs through the exact path)
-    for (fpp <- Seq(0.01, 0.5)) {
-      val out = Dedup.incrementalExactBloom(docs, fpp = fpp)
-        .collect().map(_.toString)
-      assert(out.sameElements(reference(3)),
-        s"bloom path diverged from exact join at fpp=$fpp")
-    }
+    val fp = d.select(col("doc_id"),
+      TextFunctions.fingerprint(col("text")).as("fp"))
+    val base = fp.filter(pmod(col("doc_id"), lit(deltaMod)) =!= 0)
+      .groupBy("fp").agg(fmin("doc_id").as("first_seen"))
+    fp.filter(pmod(col("doc_id"), lit(deltaMod)) === 0)
+      .join(base, Seq("fp"), "left")
+      .select(col("doc_id"),
+        org.apache.spark.sql.functions.coalesce(col("first_seen"), lit(-1L))
+          .as("first_seen"),
+        org.apache.spark.sql.functions
+          .when(col("first_seen").isNotNull, lit(1L)).otherwise(lit(0L))
+          .as("is_dup"))
+      .orderBy("doc_id").collect().map(_.toString)
+  }
+
+  private def verdicts(out: org.apache.spark.sql.DataFrame) =
+    out.collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+
+  test("exact incremental gate equals the plain left join row for row") {
+    for (deltaMod <- Seq(2, 3))
+      assert(Dedup.incrementalExact(docs, deltaMod).collect().map(_.toString)
+        .sameElements(exactReference(docs, deltaMod)),
+        s"gate diverged from the reference join at deltaMod=$deltaMod")
     // the verdicts themselves: doc 0 is delta (0%3==0); docs 1,2 are
     // base copies of its normalized text -> dup with first_seen=1
-    val m = Dedup.incrementalExactBloom(docs).collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    val m = verdicts(Dedup.incrementalExact(docs))
     assert(m(0L) == ((1L, 1L)))
     assert(m(3L) == ((-1L, 0L)))
   }
 
-  test("bloom gate never false-negatives and prunes the definitely-new") {
-    import spark.implicits._
-    import graft.functions.BloomGate
-    import org.apache.spark.sql.functions.col
-    val keys = (0L until 1000L).map(i => s"key$i").toDF("k")
-    val bloom = BloomGate.build(keys, col("k"), 1000L, 0.01)
-    // every inserted key probes true (no false negatives, the property
-    // exactness rests on)
-    assert(keys.filter(!BloomGate.mightContain(bloom, col("k"))).count() == 0L)
-    // almost all absent keys probe false at fpp=1%
-    val absent = (0L until 1000L).map(i => s"other$i").toDF("k")
-    val leaked = absent.filter(BloomGate.mightContain(bloom, col("k"))).count()
-    assert(leaked < 50L, s"fpp blew past its bound: $leaked/1000")
+  test("exact incremental gate is lazy: construction runs no job") {
+    val sc = spark.sparkContext
+    val group = "dedup-spec-lazy-gate"
+    val marker = "dedup-spec-lazy-gate-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "construct the exact gate")
+      val out = Dedup.incrementalExact(docs)
+      // a later job in its own group: the listener bus delivers in
+      // order, so once it is seen every construction job would be too
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker), "marker job never reached the listener")
+      val constructionJobs = seen.toArray.count(_ == group)
+      assert(constructionJobs == 0,
+        s"constructing the gate ran $constructionJobs jobs")
+      assert(out.columns.toSeq == Seq("doc_id", "first_seen", "is_dup"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
   }
 
   test("bloom exact gate on an empty base marks every delta doc new") {
-    // deltaMod=1 → every doc is delta, the base slice is empty: the
-    // empty-input build must yield a valid all-negative filter (not
-    // null), and every verdict is first_seen=-1 / is_dup=0
-    val out = Dedup.incrementalExactBloom(docs, deltaMod = 1).collect()
+    // deltaMod=1 → every doc is delta, the base slice is empty: every
+    // verdict is first_seen=-1 / is_dup=0
+    val out = Dedup.incrementalExact(docs, deltaMod = 1).collect()
     assert(out.length == 5)
     assert(out.forall(r => r.getLong(1) == -1L && r.getLong(2) == 0L))
   }
 
-  test("bloom geometry clears the runtime-filter defaults via scoped caps") {
-    import spark.implicits._
-    import graft.functions.BloomGate
-    import org.apache.spark.sql.functions.col
-    // a web-scale base corpus's fingerprint gate needs more than the
-    // 4M-item / 67M-bit runtime-filter defaults; geometry clamps only
-    // at BloomGate's own 1e9/1GiB ceilings, so a 10M-key geometry
-    // comes back unclamped...
-    val (n, bits) = BloomGate.geometry(10000000L, 0.01)
-    assert(n == 10000000L, s"items clamped to $n")
-    assert(bits == BloomGate.numBits(10000000L, 0.01), s"bits clamped to $bits")
-    // ...while a request past those ceilings clamps to them
-    val (nBig, bitsBig) = BloomGate.geometry(5000000000L, 0.01)
-    assert(nBig == BloomGate.MaxItems)
-    assert(bitsBig == BloomGate.MaxBits)
-    // ...and a build at 5M-item geometry (past the default cap) goes
-    // through BloomFilterAggregate by raising the session caps SCOPED
-    // to the build job — the session's caps for the planner's own
-    // injected runtime filters are untouched afterwards
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val before = (spark.conf.get(itemsKey), spark.conf.get(bitsKey))
-    val keys = (0L until 100L).map(i => s"k$i").toDF("k")
-    val bloom = BloomGate.build(keys, col("k"), 5000000L, 0.01)
-    assert(keys.filter(!BloomGate.mightContain(bloom, col("k"))).count() == 0L)
-    assert((spark.conf.get(itemsKey), spark.conf.get(bitsKey)) == before,
-      "scoped cap raise leaked into the session")
-    assert(before._1.toLong <= 4000000L,
-      s"session cap is not the small default: ${before._1}")
+  test("exact incremental gate: NULL, empty and whitespace-only texts") {
+    // deltaMod=2: even doc_ids are delta, odd are base. md5(NULL) is
+    // NULL, and a NULL fingerprint never matches (LEFT JOIN USING
+    // semantics), even against a NULL on the base side; space-only
+    // text trims to '' and matches a base ''; tabs and newlines
+    // survive trim and collapse to one space
+    val adv = Seq[(Long, String)](
+      (0L, null), (1L, null),
+      (2L, ""), (3L, "   "),
+      (4L, "     "), (5L, ""),
+      (6L, "\t \n"), (7L, " \n"),
+      (8L, " \t"), (10L, "only in the delta"),
+      (9L, "Only  IN the base"), (12L, "only in the base ")
+    ).toDF("doc_id", "text")
+    val out = Dedup.incrementalExact(adv, deltaMod = 2)
+    assert(out.collect().map(_.toString)
+      .sameElements(exactReference(adv, deltaMod = 2)))
+    val m = verdicts(out)
+    assert(m.keySet == Set(0L, 2L, 4L, 6L, 8L, 10L, 12L))
+    assert(m(0L) == ((-1L, 0L)), "a NULL fingerprint matched")
+    assert(m(2L) == ((3L, 1L)))
+    assert(m(4L) == ((3L, 1L)))
+    assert(m(6L) == ((7L, 1L)))
+    assert(m(8L) == ((7L, 1L)))
+    assert(m(10L) == ((-1L, 0L)))
+    assert(m(12L) == ((9L, 1L)))
   }
 
   test("lshEval scores LSH candidates against exact-Jaccard truth") {

@@ -212,17 +212,15 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Scan parquet"), p)
   }
 
-  test("bloom exact gate: codegen'd probe, base verifies via broadcast semi") {
-    val p = planOf(graft.operators.Dedup.incrementalExactBloom(ctx.documents))
-    // the membership probe is a Catalyst predicate in the plan (a
-    // Filter over might_contain), not an opaque UDF
-    assert(p.contains("might_contain"), p)
-    // the suspected slice broadcasts against the base scan — the base
-    // is never shuffled for the exact verification
+  test("exact incremental gate: base verifies via broadcast semi") {
+    val p = planOf(graft.operators.Dedup.incrementalExact(ctx.documents))
+    // the delta's fingerprints broadcast against the base scan — the
+    // base is never shuffled, and no membership filter is built
     assert(p.contains("LeftSemi"), p)
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("might_contain"), p)
   }
 
   test("cluster resolution: no window on cluster_id/group_id — aggregates only") {

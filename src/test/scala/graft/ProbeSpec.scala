@@ -50,6 +50,20 @@ class ProbeSpec extends AnyFunSuite {
     assert(all.take(3) == Seq("q1", "q2", "q3"))
   }
 
+  test("scale-bench section resolver: unknown sections throw and are " +
+    "named; no list means every default section, mlref opt-in") {
+    val e = intercept[IllegalArgumentException](
+      ScaleBench.resolveSections(Some("phrase,bloomgate,tpch,typo_sec")))
+    assert(e.getMessage.contains("bloomgate"))
+    assert(e.getMessage.contains("typo_sec"))
+    assert(!e.getMessage.contains("phrase"))
+    assert(ScaleBench.resolveSections(Some("phrase, mlref")) ==
+      Set("phrase", "mlref"))
+    val all = ScaleBench.resolveSections(None)
+    assert(all("tpch") && all("phrase") && all("megabucket"))
+    assert(!all("mlref"))
+  }
+
   test("timed action: count() prunes a projected UDF column, " +
     "materialize computes every row of it") {
     import org.apache.spark.sql.functions.{col, udf}
